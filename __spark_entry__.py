@@ -35,14 +35,27 @@ from cdc_wastewater_analysis_ml_spark.plans import registry
 _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # r4: classification_report gained macro/weighted rows + the confusion
     # localCheckpoint freeze (plans/metrics.py).
-    "plans/metrics.py": 4,
+    # r16 opt round: the trapezoid and step-AP terms move into shared Column
+    # helpers (roc_auc_term, average_precision_term); metric_roc_auc and
+    # metric_average_precision use them with unchanged plans, and the new
+    # metric_roc_auc_average_precision sums both over ONE binary_curve for
+    # evaluate_scored.  Changed functions: metric_roc_auc,
+    # metric_average_precision + the three new helpers (binary_curve and
+    # the accuracy/confusion/report family untouched).
+    "plans/metrics.py": 16,
     # r4: two-phase partition-offset stratified split (plans/ml.py).
     # r14 opt round: evaluate_scored persists the scored relation and
     # pulls its three metric scalars in ONE cross-joined action (the
     # previous three sequential .first() calls each re-executed the
     # model-transform pipeline).  Values computed by the same metric
     # operators, unchanged.  Changed function: evaluate_scored only.
-    "plans/ml.py": 14,
+    # r16 opt round: run_reference_scenarios persists the assembled
+    # train/test split once (released in a finally) and routes both GBT
+    # scenarios through train_gbt (gained max_iter); evaluate_scored sums
+    # ROC-AUC and AP over one shared curve.  Metric values bit-identical.
+    # Changed functions: train_gbt, evaluate_scored,
+    # run_reference_scenarios.
+    "plans/ml.py": 16,
     # r10: the hashed/semi-join verify is adopted by the remaining
     # consumers (r9 VERDICT task 1) — jaccard_verify_pairs and
     # dedup_incremental_near now route _verify_jaccard_exploded_hashed
@@ -481,19 +494,17 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
 #: judgment rationale lives in the ``_MODULE_CHANGED_IN_ROUND`` comments
 #: and git history.
 _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
-    ("plans/metrics.py", 4): (
-        "metric_accuracy",
-        "metric_confusion_matrix",
-        "metric_classification_report",
-        "metric_roc_curve",
-        "metric_pr_curve",
+    # r16: metric_roc_auc / metric_average_precision (term helpers) and the
+    # fused helper evaluate_scored now calls — call-path consumers only
+    # (metric_roc_curve / metric_pr_curve route binary_curve, untouched).
+    ("plans/metrics.py", 16): (
         "metric_roc_auc",
         "metric_average_precision",
-        # plans/ml.py evaluate_scored calls metric_roc_auc:
         "ml_gbt_metrics",
         "ml_linear_probability_metrics",
         "ml_gbt_pca_metrics",
         "ml_linear_probability_pca_metrics",
+        "ml_reference_scenarios_full",
     ),
     # r14: the five hash-gate upgrades (call-path: only the five upgraded
     # builders + their two new helpers changed; pipeline_feature_engineering
@@ -505,11 +516,11 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
         "ml_gbt_pca_metrics",
         "ml_linear_probability_pca_metrics",
     ),
-    # r14: evaluate_scored is the only AST-affected function — consumers
-    # are the queries routing it (ml_split_stratified_counts and
-    # ml_scaler_pca_k route split/scaler/PCA helpers only and keep their
+    # r16: train_gbt, evaluate_scored and run_reference_scenarios changed —
+    # consumers are the queries routing any of them (ml_split_stratified_counts
+    # and ml_scaler_pca_k route split/scaler/PCA helpers only and keep their
     # rows; ml_reference_scenarios_full is rows-only by design).
-    ("plans/ml.py", 14): (
+    ("plans/ml.py", 16): (
         "ml_gbt_metrics",
         "ml_linear_probability_metrics",
         "ml_gbt_pca_metrics",

@@ -50,44 +50,49 @@ def main(argv: list[str] | None = None) -> int:
         raw, corrected_flowpop_indicator=args.corrected
     ).persist()
 
-    # EP2 — EDA aggregates (codes.py:113-173); .show() ≙ the reference's plots
-    print("== weekly mean log concentration (codes.py:117-120)")
-    A.agg_mean_resampled(
-        engineered.na.drop(subset=["sample_collect_date"]),
-        "sample_collect_date",
-        "log_pcr_target_conc",
-    ).orderBy("week_start").show(8, truncate=False)
+    try:
+        # EP2 — EDA aggregates (codes.py:113-173); .show() ≙ the reference's plots
+        print("== weekly mean log concentration (codes.py:117-120)")
+        A.agg_mean_resampled(
+            engineered.na.drop(subset=["sample_collect_date"]),
+            "sample_collect_date",
+            "log_pcr_target_conc",
+        ).orderBy("week_start").show(8, truncate=False)
 
-    print("== monthly detection rate (codes.py:141-158)")
-    flagged = engineered.na.drop(subset=["collection_month"])
-    A.agg_conditional_rate(
-        flagged.withColumn("flag", F.col("influenza_a_detected")),
-        "collection_month",
-        "flag",
-    ).orderBy("collection_month").show(12)
+        print("== monthly detection rate (codes.py:141-158)")
+        flagged = engineered.na.drop(subset=["collection_month"])
+        A.agg_conditional_rate(
+            flagged.withColumn("flag", F.col("influenza_a_detected")),
+            "collection_month",
+            "flag",
+        ).orderBy("collection_month").show(12)
 
-    print("== top-10 jurisdictions by sample count (codes.py:160-173)")
-    R.topk_categories(engineered, "wwtp_jurisdiction", 10).show()
+        print("== top-10 jurisdictions by sample count (codes.py:160-173)")
+        R.topk_categories(engineered, "wwtp_jurisdiction", 10).show()
 
-    # EP3 — 4-scenario ML comparison (codes.py:180-309)
-    model_df = model_ready(engineered)
-    n = model_df.count()
-    print(f"== model-ready rows: {n} (reference: 212,401 on the real CSV)")
-    results = ml.run_reference_scenarios(
-        model_df, MODEL_FEATURES, LABEL_COLUMN, seed=42, max_iter=args.max_iter
-    )
-    print("== results (codes.py:309)")
-    header = f"{'model':34} {'accuracy':>9} {'roc_auc':>9} {'avg_prec':>9}"
-    print(header)
-    for r in results:
-        print(
-            f"{r.model:34} {r.accuracy:9.4f} {r.roc_auc:9.4f} "
-            f"{r.average_precision:9.4f}"
+        # EP3 — 4-scenario ML comparison (codes.py:180-309)
+        model_df = model_ready(engineered)
+        n = model_df.count()
+        print(f"== model-ready rows: {n} (reference: 212,401 on the real CSV)")
+        results = ml.run_reference_scenarios(
+            model_df, MODEL_FEATURES, LABEL_COLUMN, seed=42, max_iter=args.max_iter
         )
+        print("== results (codes.py:309)")
+        header = f"{'model':34} {'accuracy':>9} {'roc_auc':>9} {'avg_prec':>9}"
+        print(header)
+        for r in results:
+            print(
+                f"{r.model:34} {r.accuracy:9.4f} {r.roc_auc:9.4f} "
+                f"{r.average_precision:9.4f}"
+            )
 
-    # sink ≙ df.to_csv(out, index=False) (codes.py:177)
-    sink_csv(engineered.unpersist(), f"{args.out}/processed_csv")
-    print(f"== processed table written to {args.out}/processed_csv")
+        # sink ≙ df.to_csv(out, index=False) (codes.py:177)
+        # Written from the cache, then released: unpersisting first would make
+        # the sink re-parse the input and re-run EP1.
+        sink_csv(engineered, f"{args.out}/processed_csv")
+        print(f"== processed table written to {args.out}/processed_csv")
+    finally:
+        engineered.unpersist()
     return 0
 
 

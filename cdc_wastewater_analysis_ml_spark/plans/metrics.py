@@ -19,7 +19,7 @@ expressions followed by a plain sum.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -220,27 +220,43 @@ def binary_curve(
     return cum.crossJoin(F.broadcast(totals)).select(*cols)
 
 
-def metric_roc_auc(df: DataFrame, label: str, score: str, out: str = "roc_auc") -> DataFrame:
-    """Trapezoidal AUC over the ROC curve ≙ ``auc(fpr, tpr)`` (codes.py:271).
+def roc_auc_term() -> Column:
+    """Trapezoid area over [prev, cur] for one ``binary_curve(...,
+    with_totals=True)`` row; ROC-AUC is its plain ``sum``.
 
-    Window-free: because tp/fp are cumulative by descending threshold, each
-    curve row already knows its predecessor point — ``prev_tp = tp − pos``,
-    ``prev_fp = fp − (n − pos)`` — so the trapezoid over [prev, cur] is a
-    plain row-wise expression and AUC is one ``sum``.  The first (highest)
-    threshold has prev = (0, 0), which IS sklearn's prepended threshold=inf
-    point.  No global window, no single-task pass over the per-threshold
-    relation (#thresholds ≈ #rows for continuous scores).
+    Because tp/fp are cumulative by descending threshold, each curve row
+    already knows its predecessor point — ``prev_tp = tp − pos``,
+    ``prev_fp = fp − (n − pos)``.  The first (highest) threshold has prev =
+    (0, 0), which IS sklearn's prepended threshold=inf point.
     """
-    curve = binary_curve(df, label, score, with_totals=True)
     prev_tp = F.col("tp") - F.col("pos")
     prev_fp = F.col("fp") - (F.col("n") - F.col("pos"))
-    area = (
+    return (
         (F.col("fp") - prev_fp)
         / F.col("__neg_total")
         * (F.col("tp") + prev_tp)
         / (2.0 * F.col("__pos_total"))
     )
-    return curve.select(area.alias("area")).select(F.sum("area").alias(out))
+
+
+def average_precision_term() -> Column:
+    """Step-AP term (Rₙ−Rₙ₋₁)·Pₙ for one ``binary_curve(...,
+    with_totals=True)`` row; AP is its plain ``sum``.  Rₙ−Rₙ₋₁ = pos /
+    P_total (recall's delta is exactly this row's positive count), so no lag
+    window is needed."""
+    return F.col("pos") / F.col("__pos_total") * F.col("precision")
+
+
+def metric_roc_auc(df: DataFrame, label: str, score: str, out: str = "roc_auc") -> DataFrame:
+    """Trapezoidal AUC over the ROC curve ≙ ``auc(fpr, tpr)`` (codes.py:271).
+
+    Window-free: the trapezoid per threshold is the row-wise
+    :func:`roc_auc_term`, and AUC is one ``sum``.  No global window, no
+    single-task pass over the per-threshold relation (#thresholds ≈ #rows
+    for continuous scores).
+    """
+    curve = binary_curve(df, label, score, with_totals=True)
+    return curve.select(roc_auc_term().alias("area")).select(F.sum("area").alias(out))
 
 
 def metric_average_precision(
@@ -250,10 +266,28 @@ def metric_average_precision(
     (codes.py:269).  NOT the trapezoidal ``areaUnderPR`` — SURVEY §2.10 pins
     the sklearn step form; MLlib's evaluator is only an approximation of it.
 
-    Window-free: Rₙ−Rₙ₋₁ = pos / P_total per threshold row (recall's delta
-    is exactly this row's positive count), so AP is a row-wise product with
-    ``precision`` followed by one ``sum`` — no lag window.
+    Window-free: the row-wise :func:`average_precision_term` followed by one
+    ``sum`` — no lag window.
     """
     curve = binary_curve(df, label, score, with_totals=True)
-    contrib = F.col("pos") / F.col("__pos_total") * F.col("precision")
-    return curve.select(contrib.alias("contrib")).select(F.sum("contrib").alias(out))
+    return curve.select(average_precision_term().alias("contrib")).select(
+        F.sum("contrib").alias(out)
+    )
+
+
+def metric_roc_auc_average_precision(df: DataFrame, label: str, score: str) -> DataFrame:
+    """ROC-AUC and step-AP in one row (columns ``roc_auc``,
+    ``average_precision``), summed over ONE threshold curve.
+
+    :func:`metric_roc_auc` and :func:`metric_average_precision` each build
+    their own ``binary_curve`` (a range repartition with its sampling job, a
+    checkpoint, the prefix-sum window, offsets and totals); a caller that
+    needs both pays for that twice.  Here both terms are summed in one
+    aggregate over the same curve rows and the same partitioning, so each
+    value is bit-identical to its single-metric query.
+    """
+    curve = binary_curve(df, label, score, with_totals=True)
+    return curve.select(
+        F.sum(roc_auc_term()).alias("roc_auc"),
+        F.sum(average_precision_term()).alias("average_precision"),
+    )
