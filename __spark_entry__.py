@@ -135,7 +135,19 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # removed from every CC consumer serial tail (dedup_cluster_cc
     # 24→20 jobs, pipeline_corpus_curation 40→36).  Changed function:
     # connected_components only — consumers = the four CC-routing queries.
-    "operators/dedup.py": 15,
+    # r16 (simplicity): the candidates→verify family collapses to the
+    # packed-digest plan that ran by default — the exploded string and
+    # exploded digest plans, their three pinned A/B switches and the
+    # hash_verify_shingles option are deleted, and the small/big dispatch
+    # the three consumers each repeated becomes one helper
+    # (_verify_jaccard).  Plans and job counts unchanged on the default
+    # path; ngram_jaccard_pairs's digest projection is unconditional.
+    # minhash_signatures/_bands_from_sig/minhash_lsh_verified render their
+    # id column through the shared quote_ident helper (plain names render
+    # as before).  Changed functions: minhash_signatures, _bands_from_sig,
+    # the packed plans, the dispatch, minhash_lsh_verified,
+    # ngram_jaccard_pairs, jaccard_verify_pairs, dedup_incremental_near.
+    "operators/dedup.py": 16,
     "operators/caching.py": 5,
     # r6: chunk_documents rejects stride > chunk_tokens (ADVICE r5 #1 —
     # additive guard; module-granularity rule → whole corpus family, which
@@ -181,7 +193,10 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # pass disappears (shuffle write 6.51→4.51 MB at sf0.1; oracle
     # hash-identical at sf0.001/0.01/0.1).  Changed function: that one
     # builder only.
-    "plans/registry_corpus.py": 15,
+    # r16: comments only (the deleted verify_ab reference, the stale
+    # "ded feeds TWO consumers" note, the verify-rows note) — AST-neutral;
+    # its dedup queries re-verify through the operators/dedup.py entry.
+    "plans/registry_corpus.py": 16,
     # r6 session 2 NEW module: two-phase partition-offset global prefix sum
     # (consumed by the new corpus_pack_sequences + corpus_shard_assign).
     "operators/prefix.py": 6,
@@ -233,7 +248,9 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # redundant second full-width exchange of the corpus text at the
     # fixture; plan-only, results partition-invariant).  AST-affected
     # set = _augmented_docs; consumers = every query routing it.
-    "plans/registry_ext.py": 14,
+    # r16: q_ngram_jaccard's docstring points at the surviving verify plan
+    # — AST-affected block = that one query.
+    "plans/registry_ext.py": 16,
     # r12: pipeline_feature_engineering publishes user_target_mean as the
     # raw avg(0/1) int quotient and feeds the same raw value into
     # interact_v_mean's portable floor-rounding (scheduled
@@ -287,7 +304,10 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # bit-identical (same derivation as the Arrow path; fold order
     # unchanged).  Changed function: rhp_sign only — consumers = queries
     # routing rhp_sign/rhp_signature.
-    "operators/similarity.py": 15,
+    # r16 (ADVICE r15 #2/#5): rhp_sign/rhp_signature render the column
+    # name through quote_ident (identical SQL for plain names); rhp_sign's
+    # hint widens to Column | str.  Consumers = queries routing them.
+    "operators/similarity.py": 16,
     # r15 opt round: tokenize becomes the single-regex form
     # split(trim(lower(x)), '\s+') — value-identical to splitting the
     # normalize_text collapse on single spaces (bit-identity verified on
@@ -299,7 +319,11 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # Column forms (pinned by tests/test_plan_shapes.py).  Module rule: every
     # tokenize/token_count/word_shingles/lang_id consumer re-verifies — no
     # overlay, full route set (47 queries, fits the 50-row prefix).
-    "operators/text.py": 15,
+    # r16 (ADVICE r15 #2): tokenize/word_shingles render the column name
+    # through the new quote_ident helper (backticks escaped) — identical
+    # SQL for plain names, so plans are unchanged; module rule again, no
+    # overlay, full route set.
+    "operators/text.py": 16,
     # r7: RUNTIME_CONFS gained canChangeCachedPlanOutputPartitioning=true —
     # a PHYSICAL-layout conf (AQE may coalesce cached-plan output
     # partitions).  Result multisets are partition-layout invariant by house
@@ -359,7 +383,11 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # from the parquet bytes; invalidation strictly widens) — consumer set
     # stays empty, same basis as the r14 entry; regression test pins the
     # in-place-rewrite case.
-    "sources/readers.py": 15,
+    # r16 (ADVICE r15 #1): a directory with subdirectories (hive
+    # partitions) skips the schema memo — a nested rewrite changes neither
+    # the root stat nor any top-level leaf.  Metadata-only, invalidation
+    # strictly widens — consumer set stays empty.
+    "sources/readers.py": 16,
     # r5: stream_interval_join ADDED (pure function addition, existing ops
     # textually unchanged) — module-granularity rule applied anyway: the
     # whole streaming consumer family re-verifies rather than arguing
@@ -527,53 +555,27 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
         "ml_linear_probability_pca_metrics",
         "ml_reference_scenarios_full",
     ),
-    # r10 diff = _verify_jaccard_exploded_hashed (per-side flags) +
-    # minhash_lsh_verified (call-site kwargs) + jaccard_verify_pairs +
-    # dedup_incremental_near (hashed-verify adoption): consumers = every
-    # query routing through any of those four functions.
-    # r12 diff = the two _verify_jaccard_* impls only (null-guarded
-    # digests): consumer tuple trimmed to the verify routes — ngram/kgram
-    # publish their own (already null-guarded) digest plans, byte-untouched
-    # this round, and keep their r11 rows.
-    # r13 diff = (a) minhash_lsh_candidates (shingle_n metadata stamp on
-    # the size annotations) + jaccard_verify_pairs (stamp validation at the
-    # seam; ADVICE r12), (b) _verify_jaccard_packed_oriented gains the
-    # pre-partitioned packed-relation layout behind _PREPART_PACKED_HS,
-    # engaged by the big-corpus dispatch (VERDICT r12 task 3; 4-variant
-    # A/B at sf10mf: 1890.8 → 1625.3 MB at identical checksums), and
-    # (c) dedup_incremental_near pins its matched-id set so Catalyst's
-    # LeftAnti-through-Union pushdown stops re-executing the whole
-    # candidates→verify pipeline per delta branch (sf10mf: 1853→1033 MB,
-    # result-neutral caching) — call-path consumers = the queries routing
-    # through any of those functions.
-    # r14 carry-forward: the jaccard_verify_pairs cache-scope fix rides
-    # the same call-path consumer family as the r13 entry.
-    # r15: connected_components (observe-fused convergence sums) +
-    # substring_kgram_pairs (guarded pairs via bounded per-bucket collect
-    # instead of the span self-join) + simhash / minhash_signatures /
-    # minhash_lsh_verified / _bands_from_sig (per-column HOF-lambda
-    # builders rendered as SQL parsed in one selectExpr gateway call, the
-    # rhp_sign lesson) — consumers = the four CC-routing queries + the one
-    # kgram query + the one simhash query + every query routing the
-    # minhash family (signatures/banded/candidates/verified/vs_store);
-    # every other dedup op is byte-untouched (they re-verify this round
-    # anyway via the operators/text.py tokenize entry).
-    ("operators/dedup.py", 15): (
+    # r16 diff = the verify family collapse (packed plans, the one
+    # dispatch, the three consumers, ngram_jaccard_pairs) + the quote_ident
+    # rendering in minhash_signatures/_bands_from_sig — call-path consumers
+    # = every query routing the minhash family, the n-gram verify or the
+    # incremental near-dup operator (derived from registry call sites).
+    # connected_components, simhash, substring_kgram_pairs and the
+    # embedding pair generators are byte-untouched and keep their rows.
+    ("operators/dedup.py", 16): (
+        "analytic_edit_distance",
         "dedup_cluster_cc",
         "dedup_cluster_best",
-        "dedup_embedding_clusters",
         "pipeline_corpus_curation",
-        "dedup_substring_kgram",
-        "dedup_simhash",
         "dedup_minhash_signatures",
         "dedup_minhash_lsh",
-        "dedup_lsh_bucket_stats",
-        "dedup_lsh_verified",
-        "dedup_incremental_near",
-        "analytic_edit_distance",
+        "dedup_ngram_jaccard",
         "pipeline_incremental_ingest",
-        "stream_dedup_incremental_near",
         "stream_incremental_ingest",
+        "dedup_lsh_verified",
+        "dedup_lsh_bucket_stats",
+        "dedup_incremental_near",
+        "stream_dedup_incremental_near",
     ),
     ("operators/windows.py", 4): (
         "window_lag",
@@ -663,7 +665,8 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # re-verify.
     # r15: the curation builder's text-free kept/pack tail — AST-affected
     # block = that one query.
-    ("plans/registry_corpus.py", 15): ("pipeline_corpus_curation",),
+    # r16: comment-only diff, AST-neutral — empty set.
+    ("plans/registry_corpus.py", 16): (),
     ("streaming/neardup.py", 6): ("stream_dedup_incremental_near",),
     ("plans/registry_stream_ext.py", 7): (
         "stream_dedup_incremental_near",
@@ -751,18 +754,8 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # fixture, in-module and cross-module.  The r12 metric-conversion
     # queries do not route _augmented_docs and keep their r12/r13 rows
     # (call-path granularity).
-    ("plans/registry_ext.py", 14): (
-        "dedup_minhash_signatures",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "analytic_edit_distance",
-        "dedup_substring_kgram",
-        "dedup_cluster_cc",
-        "dedup_cluster_best",
-        "dedup_lsh_verified",
-        "dedup_lsh_bucket_stats",
-    ),
+    # r16: the q_ngram_jaccard docstring — AST-affected block = that query.
+    ("plans/registry_ext.py", 16): ("dedup_ngram_jaccard",),
     ("operators/relational.py", 4): (),
     # r11 diff = recall_at_k only: consumers are the query calling it
     # (sim_recall_at_k) and the sweep (its registry twin _sweep_row changed
@@ -777,7 +770,8 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # r15: rhp_sign/rhp_signature only — consumers = every query routing
     # rhp_signature (incl. the embedding-cluster CC pair generator; the
     # multi-table queries route rhp_signature_arrow, byte-untouched).
-    ("operators/similarity.py", 15): (
+    # r16: rhp_sign/rhp_signature identifier quoting — same consumer set.
+    ("operators/similarity.py", 16): (
         "sim_cosine_lsh",
         "dedup_embedding_cosine_lsh",
         "dedup_embedding_clusters",
@@ -797,7 +791,8 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # its own module entries).
     # r14: schema-memoization is metadata-only (see the module entry) —
     # empty set.  The r4 ts-reader cohort it replaces re-verified in r5+.
-    ("sources/readers.py", 15): (),
+    # r16: partitioned-dir memo skip — metadata-only, empty set.
+    ("sources/readers.py", 16): (),
     ("sources/sinks.py", 4): ("scan_json_roundtrip", "scan_orc_roundtrip"),
     # r4 additive: stream_lag_per_key_reordered (+ the TWS variant) are new
     # functions consumed only by the NEW query below (never verified before,

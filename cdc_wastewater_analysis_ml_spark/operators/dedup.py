@@ -30,7 +30,7 @@ from .caching import (
     scoped_persist,
     transfer_cache_scope,
 )
-from .text import fingerprint, token_count, word_shingles
+from .text import fingerprint, quote_ident, token_count, word_shingles
 
 
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -75,7 +75,7 @@ def minhash_signatures(
     # paid several py4j round trips per transform lambda, serial driver
     # time per consumer build.  Parsed nodes are identical, so signatures
     # are bit-identical (oracle-pinned).
-    sig_exprs = [f"`{id_col}`"]
+    sig_exprs = [quote_ident(id_col)]
     if with_size:
         sig_exprs.append("size(array_distinct(__shingles)) AS __n")
     sig_exprs += [
@@ -216,89 +216,24 @@ def _bands_from_sig(
         for b in range(bands)
     ]
     return sig.selectExpr(
-        f"`{id_col}`",
+        quote_ident(id_col),
         *extra_cols,
         "explode(array(" + ", ".join(band_structs) + ")) AS band",
     ).selectExpr(
-        f"`{id_col}`",
+        quote_ident(id_col),
         *extra_cols,
         "band.band_id AS band_id",
         "band.band_key AS band_key",
     )
 
 
-def _verify_jaccard_exploded(
-    sh: DataFrame, pairs: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact Jaccard for candidate pairs WITHOUT ever joining the shingle
-    ARRAYS: explode the (distinct) shingles to narrow ``(id, shingle)``
-    rows, count the shared shingles per pair with two equi joins, and
-    derive |A∪B| from the per-doc set sizes.
-
-    Why not ``array_intersect`` on joined arrays (the r6 design): the
-    array-carrying relations are O(corpus) WIDE rows whose in-memory size
-    explodes relative to their compressed shuffle stats (repetitive text
-    compresses extremely well), so ANY engine-chosen broadcast of them is
-    a latent OOM — the r7 100× probe killed exactly that (AQE saw a
-    ≤64 MB compressed side, built a ~GiB broadcast, died), and pinning a
-    merge join instead shuffled 3.9 GB of sorted arrays at sf10 (118 s).
-    Exploded rows are narrow, their size estimates honest, every join key
-    high-cardinality — nothing here is broadcast-temptable OR
-    sort-heavy, at any scale (the ``dedup_substring_kgram`` design,
-    applied to Jaccard verification).
-
-    ``threshold`` must be > 0: pairs sharing NO shingle are dropped by the
-    inner intersection join, which coincides with the threshold filter for
-    any positive threshold (and every genuine MinHash band collision
-    shares its argmin shingle, so LSH candidates always intersect).
-
-    ``sh`` = persisted ``(id_col, __shs array)``; read three times (two
-    explode sides + sizes) from cache.
-    """
-    if threshold <= 0:
-        raise ValueError(
-            "threshold must be > 0 (zero-overlap pairs are dropped by the "
-            "intersection join)"
-        )
-    # The exploded relation inherits the corpus' deceptive compressibility
-    # (same repetitive strings, just narrow rows): AQE's compressed runtime
-    # stats can still nominate it for broadcast at scale.  The guard is the
-    # engine-wide AQE broadcast cap (RUNTIME_CONFS
-    # spark.sql.adaptive.autoBroadcastJoinThreshold, sized for worst-case
-    # dictionary-compression expansion) — it keeps the small-scale
-    # broadcast-the-tiny-side plan AND forbids the compressed-but-huge
-    # build, without pinning a join strategy here (a merge pin costs ~1 s
-    # per query at sf0.1, measured).
-    ex = sh.select(F.col(id_col), F.explode(F.col("__shs")).alias("__h"))
-    sz = sh.select(F.col(id_col), F.size(F.col("__shs")).alias("__n"))
-    inter = (
-        pairs.join(ex.select(F.col(id_col).alias("id_a"), "__h"), "id_a")
-        .join(ex.select(F.col(id_col).alias("id_b"), "__h"), ["id_b", "__h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    j = inter.join(
-        sz.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na")),
-        "id_a",
-    ).join(
-        sz.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb")),
-        "id_b",
-    )
-    jac = F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))
-    # Raw integer-quotient publication + raw-threshold filter, mirroring
-    # the hashed variant (r11; rationale there).
-    return j.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
 #: Above this many candidate ids the semi-join filter sets stop fitting
 #: the engine's 4 MB AQE broadcast budget (ids are 8-byte longs plus row
 #: overhead) and AQE would demote the filters to full shuffles of the
-#: exploded relation — worse than no filter at all (A/B: +456 MB).
+#: shingle relation — worse than no filter at all (A/B: +456 MB).
 _SEMIJOIN_MAX_IDS = 400_000
 
-#: Below this ESTIMATED input size the exploded-shingle exchanges the
+#: Below this ESTIMATED input size the corpus-side exchanges the
 #: reduction removes are cheaper than its own fixed cost — one extra
 #: cache-materialization action alone measured +1.4 s at the 5k-doc bench
 #: rung, wiping out a win that doesn't exist at that scale.  The estimate
@@ -310,7 +245,7 @@ _SEMIJOIN_MIN_INPUT_BYTES = 16 * 1024 * 1024
 
 #: Column-metadata key stamped on generator-produced ``__na``/``__nb`` size
 #: annotations: records the shingle width the sizes were computed at, so
-#: the verify seam can reject a generator/verify ``shingle_n`` mismatch
+#: the verify can reject a generator/verify ``shingle_n`` mismatch
 #: instead of silently mis-prefiltering (ADVICE r12).  Metadata rides the
 #: StructField through select/alias/distinct, costing nothing on the wire.
 _SIZE_META_KEY = "spark_graft.shingle_n"
@@ -346,151 +281,19 @@ def _estimated_bytes(df: DataFrame) -> int:
     return -1 if est >= _STATLESS_SENTINEL_BYTES else est
 
 
-def _verify_jaccard_exploded_hashed(
-    sh: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    threshold: float,
-    reduce_a: bool = True,
-    reduce_b: bool = True,
-) -> DataFrame:
-    """:func:`_verify_jaccard_exploded` plus the two shuffle cuts the r8
-    100× probe pointed at (the verify stage was the worst remaining scaler:
-    exponent 0.82, ~1.8 GB shuffled at the ov100 rung):
-
-    **Semi-join reduction** (the big one): only documents that appear in
-    some candidate pair can contribute to any intersection, yet the r8 plan
-    shuffled the WHOLE corpus' exploded shingle relation through both
-    intersection joins (measured: 715 of 1154 MB at ov100 for a candidate
-    set touching <1% of docs).  Each exploded side is first left-semi
-    filtered by its side's candidate-id set — a relation of bare ids far
-    under the engine's 4 MB AQE broadcast cap in any realistic corpus, so
-    the filter applies MAP-SIDE over the cached shingle scan and the
-    corpus-sized relation never reaches an exchange.  The filter is applied
-    to the NARROW exploded rows, never to the array-carrying ``sh`` (a
-    degenerate everything-is-a-candidate corpus then degrades to exactly
-    the r8 plan — narrow rows shuffle — instead of dragging arrays through
-    an exchange, preserving the r7 no-wide-rows invariant).  ``pairs`` is
-    consumed four times here (two id sets + two probe sides): callers must
-    pass a persisted/materialized relation or the candidate front half
-    re-executes per consumer.
-
-    **Digest narrowing**: the exploded shingle column is hashed to a 64-bit
-    ``xxhash64`` digest before any exchange.  Set sizes and intersection
-    counts — hence the Jaccard values — are preserved exactly unless two
-    distinct shingles of one candidate pair collide in 64 bits
-    (≈ m²/2⁶⁵ per pair: ~10⁻¹³ at m=10⁴ shingles — negligible at any
-    target scale, and the failure mode is one Jaccard nudged up, not a
-    wrong join).  Measured alone this buys little on wire bytes (repetitive
-    shingle text compresses ~as well as random longs are incompressible)
-    but ~8% wall from cheaper serialization/comparison; it also caps the
-    degenerate case above at long-width rows.
-
-    Reduction flags (``reduce_a`` / ``reduce_b``) require ``pairs`` to be
-    PERSISTED AND MATERIALIZED by the caller when either is set: the filter
-    sets consume it again, and — load-bearing — AQE only plans the filters
-    as broadcasts when the candidate sizes are already known when the main
-    action starts; left to materialize in-flight, the exploded exchanges
-    race the id-set stages and the reduction never engages (A/B at ov100:
-    1116 MB lazy vs 444 MB materialized vs 1234 baseline).  Callers disable
-    a side when its candidate-id set is NOT a selective broadcastable
-    subset (saturated corpora, id sets past the ~4 MB broadcast budget) —
-    the filter then costs its stages and buys nothing (see
-    :func:`_adaptive_hashed_verify`, the shared gate).  The flags are PER
-    SIDE (r10) because the incremental delta-vs-store shape is
-    asymmetric: the ``id_a`` set is bounded by the (tiny) delta even when
-    the store side is saturated, so filtering ``ex_a`` cuts the store's
-    entire exploded contribution from that side regardless of how
-    selective the ``id_b`` set is — the shared gate measures each side's
-    DISTINCT id count independently.
-
-    r10: this is now THE verify plan for every candidates→verify consumer
-    (:func:`minhash_lsh_verified`, :func:`jaccard_verify_pairs`,
-    :func:`dedup_incremental_near`); the string-keyed
-    :func:`_verify_jaccard_exploded` remains only as the byte-exact
-    opt-out (``hash_verify_shingles=False``) and as the oracle for the
-    digest-equivalence tests.
-    """
-    if threshold <= 0:
-        raise ValueError(
-            "threshold must be > 0 (zero-overlap pairs are dropped by the "
-            "intersection join)"
-        )
-    # NULL-preserving digest (r12 ADVICE): xxhash64 SKIPS null arguments and
-    # returns the bare seed hash, so an unguarded digest would give every
-    # null shingle (word_shingles(null text) yields [NULL]) ONE shared join
-    # key and pair all null-text docs at jaccard 1.0 — where the string
-    # plan's equi-join (null never matches null) drops them.  The
-    # when(isNotNull) keeps the digest NULL, which the __h equi-join drops
-    # exactly like the string plan (pinned in
-    # test_verify_null_text_never_pairs).
-    ex = sh.select(
-        F.col(id_col), F.explode(F.col("__shs")).alias("__s")
-    ).select(
-        F.col(id_col),
-        F.when(F.col("__s").isNotNull(), F.xxhash64(F.col("__s"))).alias("__h"),
-    )
-    ex_a = ex.select(F.col(id_col).alias("id_a"), "__h")
-    ex_b = ex.select(F.col(id_col).alias("id_b"), "__h")
-    # Explicit broadcast of the gated filter sets (r13): the whole point of
-    # the reduction is to thin each side BEFORE its exchange, and the gate
-    # (_adaptive_hashed_verify) only sets a flag when the distinct-id set
-    # is ≤ _SEMIJOIN_MAX_IDS — provably broadcast-bounded.  Left to AQE,
-    # the 32-file fixtures planned these as SortMergeJoin LeftSemi (the
-    # corpus side exchanged FULL-SIZE, then filtered — 268.2 MB/side at
-    # sf10mf, the reduction's byte benefit silently zeroed); the hint makes
-    # the intended plan deterministic, same style as the bucket guard's
-    # pinned merge hint.
-    if reduce_a:
-        ex_a = ex_a.join(
-            F.broadcast(pairs.select("id_a").distinct()), "id_a", "left_semi"
-        )
-    if reduce_b:
-        ex_b = ex_b.join(
-            F.broadcast(pairs.select("id_b").distinct()), "id_b", "left_semi"
-        )
-    sz = sh.select(F.col(id_col), F.size(F.col("__shs")).alias("__n"))
-    inter = (
-        pairs.join(ex_a, "id_a")
-        .join(ex_b, ["id_b", "__h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    j = inter.join(
-        sz.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na")),
-        "id_a",
-    ).join(
-        sz.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb")),
-        "id_b",
-    )
-    jac = F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))
-    # RAW IEEE quotient, not round(·, 6) (r11, the quality_linear_score
-    # rule): both operands are exact integers, so the single double
-    # division is bit-identical cross-engine — the house 6dp rounding is
-    # for floats whose UPSTREAM arithmetic differs, and on an integer
-    # quotient it only ADDS the .5-at-the-7th-digit boundary class where
-    # Spark's BigDecimal-HALF_UP and DuckDB's scaled multiply can disagree
-    # (shingle-set unions hit 2^7·5^b sizes on real fixtures).  The
-    # threshold filter compares the raw value for the same reason.
-    return j.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
 def _packed_digest_relation(sh: DataFrame, id_col: str) -> DataFrame:
-    """(id, __hs array<long>, __n) packed digest relation shared by BOTH
-    packed verify plans (extracted r12 review — the two copies must never
-    diverge or the oriented/unoriented bit-identity contract breaks).
+    """(id, __hs array<long>, __n) packed digest relation shared by the
+    oriented and unoriented verify plans (one copy, so their bit-identity
+    contract cannot drift).
 
     Null shingles are FILTERED out of the digest array (r12 ADVICE):
     xxhash64 skips null args (returns the seed hash), so an unfiltered
     transform would give every null-text doc ([NULL] from word_shingles)
     the same one-element array and pair them all at jaccard 1.0.  Mapping
     to a NULL element instead would not do either — ``array_intersect``
-    MATCHES null elements, unlike the exploded plans' equi-join.  The
-    size column keeps the ORIGINAL array length so set sizes (hence
-    jaccard denominators) stay identical to the exploded/string plans,
-    where the null element counts toward __n but can never intersect."""
+    MATCHES null elements.  The size column keeps the ORIGINAL array
+    length (the distinct shingle-set size), where the null element counts
+    toward __n but can never intersect."""
     return sh.select(
         F.col(id_col),
         F.transform(
@@ -509,40 +312,42 @@ def _verify_jaccard_packed(
     reduce_a: bool = True,
     reduce_b: bool = True,
 ) -> DataFrame:
-    """Array-packed digest verify — the r11 answer to the 3.7 GB stage the
-    sf10 profile pinned on :func:`_verify_jaccard_exploded_hashed`'s
-    pair-expansion exchange (67% of ``dedup_lsh_verified``'s 5499 MB).
+    """Exact Jaccard for candidate pairs over packed shingle DIGESTS: each
+    pair joins its two docs' ``array<long>`` digest rows
+    (:func:`_packed_digest_relation`) and counts
+    ``size(array_intersect(...))`` per pair.  ``sh`` = persisted
+    ``(id_col, __shs)`` distinct-shingle relation.
 
-    The exploded plan replicates each candidate pair once PER SHINGLE of
-    side A through the second intersection exchange — 24 bytes
-    (id_a, id_b, digest) per shingle instance.  This plan instead joins
-    each pair to its two docs' packed ``array<long>`` digest rows and
-    counts ``size(array_intersect(...))`` per pair: the pair-expansion
-    exchange carries ONE row per pair with side A's digest array inline —
-    8 bytes per shingle plus 16 per pair, a ~3× byte cut on the dominant
-    stage at identical results (sf10 A/B in PROBE_r11 notes).  Intersection
-    counts are exact because ``__shs`` is ``array_distinct`` per doc and
-    the per-doc digest arrays stay distinct modulo the same ~2⁻⁶⁵
-    collision bound as the exploded digest plan.
+    The shingle strings are hashed to 64-bit ``xxhash64`` map-side, before
+    any exchange.  Set sizes and intersection counts — hence the Jaccard
+    values — are exact unless two distinct shingles of one pair collide in
+    64 bits (≈ m²/2⁶⁵ per pair: ~10⁻¹³ at m=10⁴; the failure mode is one
+    Jaccard nudged up, never a wrong join).  Packed rather than exploded
+    (r11): an exploded ``(id, digest)`` plan replicates each pair once PER
+    SHINGLE through the pair-expansion exchange, where this plan carries
+    one row per pair with side A's digest array inline — ~3× fewer bytes
+    on the dominant stage at identical results (sf10 dedup_lsh_verified
+    5527 → 2203 MB, 81 → 36 s; PROBE_r11).  A mis-broadcast of the wide
+    rows on deceptive compressed stats is forbidden by the engine-wide AQE
+    broadcast cap (RUNTIME_CONFS, sized for worst-case dictionary
+    expansion).
 
-    Wide-row caveats, addressed: (a) mis-broadcast on deceptive
-    compressed stats is forbidden by the engine-wide AQE broadcast cap
-    (RUNTIME_CONFS, sized for worst-case dictionary expansion — same guard
-    the exploded plan relies on); (b) a pair whose intersection is empty
-    SURVIVES the inner joins here (the exploded plan drops it at the
-    digest equi-join), yielding jaccard 0 — dropped by the same
-    ``threshold > 0`` contract both plans enforce.
+    ``threshold`` must be > 0 (:func:`_verify_jaccard` validates): a pair
+    with an empty intersection survives the inner joins with jaccard 0 and
+    only the threshold filter drops it.
 
-    Same per-side semi-join reduction contract as the exploded variant:
-    ``pairs`` must be persisted AND materialized when either flag is set,
-    and a side's filter only pays when its distinct-id set is selective
-    and broadcastable (:func:`_adaptive_hashed_verify` owns the gates).
+    Per-side semi-join reduction (``reduce_a`` / ``reduce_b``): only docs
+    that appear in some candidate pair can contribute to an intersection,
+    so each packed side is first left-semi filtered by its side's
+    broadcast candidate-id set and the corpus-sized relation never reaches
+    an exchange.  ``pairs`` must then be PERSISTED AND MATERIALIZED: the
+    filter sets consume it again, and AQE plans them as broadcasts only
+    when the candidate sizes are known when the main action starts (A/B at
+    ov100: 1116 MB lazy vs 444 MB materialized vs 1234 MB unreduced).  The
+    flags are per side because the delta-vs-store shape is asymmetric: the
+    ``id_a`` set is bounded by the delta even when the store side is
+    saturated.  :func:`_verify_jaccard` owns the gates.
     """
-    if threshold <= 0:
-        raise ValueError(
-            "threshold must be > 0 (zero-intersection pairs survive the "
-            "packed joins with jaccard 0 and must be filtered)"
-        )
     hs = _packed_digest_relation(sh, id_col)
     a = hs.select(
         F.col(id_col).alias("id_a"),
@@ -554,10 +359,10 @@ def _verify_jaccard_packed(
         F.col("__hs").alias("__hb"),
         F.col("__n").alias("__nb"),
     )
-    # Explicit broadcast of the gated filter sets (r13) — see the exploded
-    # twin: the gate bounds the id sets, and without the hint the mf
-    # fixtures planned SMJ LeftSemi, exchanging each packed side FULL-SIZE
-    # before filtering.
+    # Explicit broadcast of the gated filter sets (r13): the gate bounds
+    # each id set at _SEMIJOIN_MAX_IDS, and left to AQE the 32-file
+    # fixtures planned SortMergeJoin LeftSemi — each packed side exchanged
+    # FULL-SIZE, then filtered, silently zeroing the reduction.
     if reduce_a:
         a = a.join(
             F.broadcast(pairs.select("id_a").distinct()), "id_a", "left_semi"
@@ -569,7 +374,11 @@ def _verify_jaccard_packed(
     j = pairs.join(a, "id_a").join(b, "id_b")
     inter = F.size(F.array_intersect(F.col("__ha"), F.col("__hb")))
     jac = inter / (F.col("__na") + F.col("__nb") - inter)
-    # Raw integer-quotient publication (r11 rule; see the exploded plan).
+    # RAW IEEE quotient, not round(·, 6) (r11, the quality_linear_score
+    # rule): both operands are exact integers, so the single division is
+    # bit-identical cross-engine, while rounding it only ADDS the
+    # .5-at-the-7th-digit boundary class where Spark's HALF_UP and DuckDB
+    # can disagree.  The threshold filter compares the raw value too.
     return j.select("id_a", "id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
@@ -615,27 +424,21 @@ def _verify_jaccard_packed_oriented(
     — from :func:`minhash_lsh_candidates` ``with_sizes=True`` or the fused
     operator).  NO per-side semi-join reduction: orientation scatters each
     original side's ids across both join keys, which breaks exactly the
-    asymmetric delta-vs-store reduction (DEVNOTES r11) — callers dispatch
-    here only in the both-gates-off regime (:func:`_adaptive_hashed_verify`
-    owns that decision; the small-corpus paths are gates-off by
-    definition)."""
-    if threshold <= 0:
-        raise ValueError(
-            "threshold must be > 0 (zero-intersection pairs survive the "
-            "packed joins with jaccard 0 and must be filtered)"
-        )
+    asymmetric delta-vs-store reduction (DEVNOTES r11) — so
+    :func:`_verify_jaccard` dispatches here only in the both-gates-off
+    regime (the small-corpus leg is gates-off by definition)."""
     hs = _packed_digest_relation(sh, id_col)
     pinned = None
-    if prepart and _PREPART_PACKED_HS:
+    if prepart:
         # r13 "bucketed pre-join layout" (VERDICT r12 task 3): one exchange
         # + cache instead of two exchanges of the array relation — joins 1
         # and 2 read the SAME hash partitioning through the
         # __k_small/__k_big alias projections (alias-aware output
-        # partitioning), so EnsureRequirements shuffles only the pair side.
-        # Requested only by the big-corpus dispatch (prepart=True): the
-        # small-corpus callers keep the documented one-lazy-plan contract,
-        # where the extra exchange + cache would be pure fixed cost below
-        # the broadcast floor.  Pinned to the returned plan's lifetime.
+        # partitioning), so EnsureRequirements shuffles only the pair side
+        # (sf10mf: 1890.8 → 1625.3 MB at identical checksums).  Requested
+        # only by the big-corpus leg: on the small leg the extra exchange +
+        # cache would be pure fixed cost below the broadcast floor.
+        # Pinned to the returned plan's lifetime.
         n_part = int(
             sh.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
@@ -665,122 +468,83 @@ def _verify_jaccard_packed_oriented(
     j = op.join(small, "__k_small").join(big, "__k_big")
     inter = F.size(F.array_intersect(F.col("__h_small"), F.col("__h_big")))
     jac = inter / (F.col("__n_small") + F.col("__n_big") - inter)
-    # Raw integer-quotient publication (r11 rule; see the exploded plan).
+    # Raw integer-quotient publication (r11 rule; see the unoriented plan).
     out = j.select("id_a", "id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
     return scoped_persist(out, pinned) if pinned is not None else out
 
 
-def sized_candidates_active() -> bool:
-    """True iff the size-annotated candidate path is live — the packed
-    impl seam AND the orientation seam are both on.  Registry blocks that
-    opt their candidate generators into ``with_sizes=True`` call this so
-    the A/B reference variants (tools/verify_ab.py flips the seams)
-    measure the FAITHFUL unannotated baseline plan, not the annotated
-    candidates with the annotation stripped (r12 review)."""
-    return _ORIENT_SIZED_VERIFY and _HASHED_VERIFY_IMPL is _verify_jaccard_packed
-
-
-#: r12 orientation seam (A/B'd by tools/verify_ab.py alongside the impl
-#: seam below): when True AND the impl seam is the packed plan, size-
-#: annotated both-gates-off verifies route _verify_jaccard_packed_oriented
-#: (+ the provable size-ratio prefilter at candidate time).
-_ORIENT_SIZED_VERIFY = True
-
-#: r13 pre-partitioned packed-relation seam (VERDICT r12 task 3 — the
-#: "bucketed pre-join layout" lever): when True, the oriented verify
-#: repartitions the packed digest relation ONCE by id and persists it, so
-#: BOTH pair-expansion joins consume the cache's hash partitioning through
-#: the alias projections instead of exchanging the array relation twice
-#: (the arrays are the wide side: ~8·m bytes/doc/exchange).  The pair-side
-#: exchanges — including the dominant small-array expansion — are
-#: unchanged: each pair still has to meet its partner doc's partition.
-#: A/B'd by tools/verify_ab.py (packed_oriented vs packed_oriented_prepart)
-#: at identical checksums before adoption.
-_PREPART_PACKED_HS = True
-
-
-#: The digest-verify implementation every candidates->verify consumer
-#: routes through (r11 A/B seam, tools/verify_ab.py).  ADOPTED: the
-#: packed-array plan, on measurement at every rung with bit-identical
-#: checksums (steady-state shuffle MB / wall s, exploded -> packed):
-#:   dedup_lsh_verified    sf10  5527 -> 2203 MB, 81.2 -> 35.8 s
-#:                         ov100  877 ->  726 MB, 43.0 -> 35.9 s
-#:                         sf0.1  2.4 ->  2.4 MB,  2.8 ->  2.0 s
-#:   dedup_incremental_near sf10 4843 -> 2071 MB, 93.5 -> 60.0 s
-#: The exploded-digest plan remains as the A/B reference and regression
-#: oracle (equivalence-tested in tests/test_scale_ops.py).
-_HASHED_VERIFY_IMPL = _verify_jaccard_packed
-
-
-def _adaptive_hashed_verify(
+def _verify_jaccard(
     sh: DataFrame,
     pairs: DataFrame,
     id_col: str,
     threshold: float,
-    n_docs: int,
+    inputs: tuple[DataFrame, ...],
     sized: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Big-corpus verify dispatch shared by the three candidates→verify
-    consumers (the gate previously lived as three hand-kept copies — r10
-    review): materialize the candidate relation under one barrier, gate
-    each side's semi-join reduction on its DISTINCT candidate-id count,
-    and run the digest verify.  Returns ``(verified, persisted_pairs)``;
-    the caller owns the returned pin (scopes it onto the plan it
-    returns).
+    n_docs: int | None = None,
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+    """The one candidates→verify dispatch, shared by
+    :func:`minhash_lsh_verified`, :func:`jaccard_verify_pairs` and
+    :func:`dedup_incremental_near`.  ``sh`` = persisted ``(id_col,
+    __shs)`` distinct-shingle relation; ``pairs`` = ``(id_a, id_b)``, plus
+    ``__na``/``__nb`` iff ``sized``; ``inputs`` = the consumer's input
+    frames, whose Catalyst size estimate picks the leg.  Returns
+    ``(verified, pins)``; the caller scopes ``pins`` onto the plan it
+    returns.
 
-    The pair relation is re-projected before persisting so a
-    caller-owned (possibly caller-persisted) ``pairs`` handle is never
-    cached — or later uncached by a scope finalizer — behind the
-    caller's back (r10 review; the projection is plan-identical, the
-    cache entry is just privately owned).
+    **Small corpus** (estimated total under ``_SEMIJOIN_MIN_INPUT_BYTES``,
+    or any estimate unknown): no eager job, no pin — the reduction's fixed
+    costs (a barrier action + distinct sets + broadcasts) exceed the
+    exchanges it removes there (+1.4 s at the 5k-doc rung, A/B'd r9).
+    Gates-off by definition, so sized pairs take the oriented plan.
 
-    Byte-scaling contract (r14, PROBE_PAIRS_r14 — the committed
-    pairs-vs-bytes isolation VERDICT r13 task 1 asked for): total shuffle
-    bytes of the candidates→verify family decompose as (linear-in-docs
-    corpus-side exchanges) + (linear-in-candidate-pairs pair-side
-    exchanges), and the measured bytes-per-candidate FALLS with scale
-    (closed-vocab sf1mf→sf10mf: 0.514 → 0.262 MB per 1k candidates while
-    candidate pairs grew at exponent 1.93).  Every superlinear byte
-    exponent ever read on this family (seg2 ~1.63-1.64) is the CANDIDATE
-    DENSITY of the closed-vocabulary fixture — band keys saturate as the
-    corpus grows at fixed vocabulary — not a plan defect: the verified
-    OUTPUT pairs are exactly linear in corpus size on every measured
-    segment of all three ladders (exp 1.000-1.001), so the surplus
-    candidates are banding false positives the verify rejects.  In the
-    open-vocabulary regime (vocabulary grows with the corpus, the
-    production shape) candidates themselves are near-linear (exp 1.089,
-    ov1→ov100).  The pinned contract: bytes are linear in docs +
-    candidate pairs; candidate growth is a data property to be managed
-    upstream (exact-dedup first, ``max_bucket_size`` guard on adversarial
-    corpora), not by this operator's plan.
+    **Big corpus**: ``sh.count()`` (skipped when the caller passes its own
+    ``n_docs``) fills the shingle cache before its concurrent verify
+    consumers can race it (the r8 lesson: 530 → 121 s at ov100).  The
+    pair relation is re-projected and persisted privately — a caller-owned
+    ``pairs`` handle is never cached, or later uncached by a scope
+    finalizer, behind the caller's back — and ONE agg job over it yields
+    both distinct-id counts and doubles as the materialization barrier AQE
+    needs to plan the filter semi-joins as broadcasts (PROBE_r09).  Each
+    side's reduction is gated on its DISTINCT id count: it must fit the
+    ~4 MB broadcast budget (``_SEMIJOIN_MAX_IDS``) and cover at most half
+    the shingled docs (filtering removes nothing when most docs are
+    candidates).  A pair-COUNT proxy disabled the side-A reduction in the
+    asymmetric delta-vs-store case the per-side flags exist for: a small
+    delta matching many store docs has a huge pair count but a tiny
+    distinct ``id_a`` set.  With both gates off, sized pairs take the
+    oriented plan on the pre-partitioned layout.
 
-    Per-side gates (r10 review fix): the filter set a reduction
-    broadcasts is ``pairs.select(id_x).distinct()``, so the gate
-    measures exactly that set — the distinct id count must fit the
-    ~4 MB broadcast budget (``_SEMIJOIN_MAX_IDS``) and cover at most
-    half the shingled docs (selectivity: filtering removes nothing when
-    most docs are candidates anyway).  The previous pair-COUNT proxy
-    (``2·pairs ≤ min(0.5·docs, MAX_IDS)``) over-estimated both id sets
-    and in particular disabled the side-A reduction in the asymmetric
-    delta-vs-store case the per-side flags were built for — a small
-    delta matching MANY store docs each has a huge pair count but a tiny
-    distinct ``id_a`` set.  One agg job over the freshly persisted pairs
-    yields both distinct counts and doubles as the materialization
-    barrier AQE needs to plan the filters as broadcasts (PROBE_r09 A/B:
-    left lazy, the reduction never engages).
+    Byte-scaling contract (r14, PROBE_PAIRS_r14): the family's shuffle
+    bytes are linear in docs (corpus-side exchanges) plus candidate pairs
+    (pair-side exchanges), and bytes per candidate FALL with scale
+    (closed-vocab sf1mf→sf10mf: 0.514 → 0.262 MB per 1k candidates).
+    Every superlinear byte exponent read on this family (seg2 ~1.63) is
+    the CANDIDATE density of the closed-vocabulary fixture — band keys
+    saturate at fixed vocabulary — while verified output pairs are exactly
+    linear (exp 1.000-1.001) and open-vocabulary candidates near-linear
+    (exp 1.089, ov1→ov100).  Candidate growth is a data property managed
+    upstream (exact-dedup first, ``max_bucket_size``), not by this plan.
     """
     if threshold <= 0:
-        # Validate BEFORE the eager barrier (r10 review): the digest
-        # verify raises the same error, but only after this helper has
-        # already run candidate generation and persisted the private pair
-        # cache — which the exception would then orphan for the session
-        # lifetime (no handle survives to unpersist it).
+        # Validated before the big leg's eager barrier (r10 review): a
+        # later failure would orphan the private pair cache.
         raise ValueError(
-            "threshold must be > 0 (zero-overlap pairs are dropped by the "
-            "intersection join)"
+            "threshold must be > 0 (zero-intersection pairs survive the "
+            "packed joins with jaccard 0 and must be filtered)"
         )
+    ests = [_estimated_bytes(d) for d in inputs]
+    if min(ests) < 0 or sum(ests) < _SEMIJOIN_MIN_INPUT_BYTES:
+        if sized:
+            out = _verify_jaccard_packed_oriented(sh, pairs, id_col, threshold)
+        else:
+            out = _verify_jaccard_packed(
+                sh, pairs, id_col, threshold, reduce_a=False, reduce_b=False
+            )
+        return out, ()
+    if n_docs is None:
+        n_docs = sh.count()
     cols = ["id_a", "id_b", "__na", "__nb"] if sized else ["id_a", "id_b"]
     pairs = pairs.select(*cols).persist()
     counts = pairs.agg(
@@ -792,34 +556,27 @@ def _adaptive_hashed_verify(
         return n_ids <= _SEMIJOIN_MAX_IDS and 2 * n_ids <= n_docs
 
     reduce_a, reduce_b = _gate(counts["na"]), _gate(counts["nb"])
-    if sized and not (reduce_a or reduce_b) and sized_candidates_active():
-        # Saturated (both-gates-off) regime with size-annotated pairs:
-        # orientation is safe — there is no per-side semi-join reduction
-        # for it to break — and the smaller-side expansion is a pure byte
-        # cut (r12; A/B in tools/verify_ab.py).
-        return (
-            _verify_jaccard_packed_oriented(
-                sh, pairs, id_col, threshold, prepart=True
-            ),
-            pairs,
+    if sized and not (reduce_a or reduce_b):
+        # Saturated regime: no per-side reduction for orientation to break,
+        # so the smaller-side expansion is a pure byte cut (r12).
+        out = _verify_jaccard_packed_oriented(
+            sh, pairs, id_col, threshold, prepart=True
         )
-    # prepart MEASURED-NEUTRAL for this (gated / unsized) dispatch leg and
-    # NOT passed (r13): a seam-flip A/B on dedup_incremental_near at sf10mf
-    # read byte-identical stage structures (1033.0 MB, 268.2 MB side
-    # exchanges unchanged) with the pin engaged — unlike the oriented leg
-    # above, where the same layout measured −265 MB.  The per-side
-    # reduction semi-joins and the caller's matched-id cache interact with
-    # the cached partitioning here; rejected on measurement, the r12
-    # sized-path precedent for this exact operator.
-    out = _HASHED_VERIFY_IMPL(
-        sh,
-        pairs.select("id_a", "id_b"),
-        id_col,
-        threshold,
-        reduce_a=reduce_a,
-        reduce_b=reduce_b,
-    )
-    return out, pairs
+    else:
+        # prepart is NOT used on this gated/unsized leg (r13): an on/off
+        # A/B on dedup_incremental_near at sf10mf read byte-identical
+        # stage structures with the pin engaged (1033.0 MB either way) —
+        # the reduction semi-joins and the caller's matched-id cache
+        # already shape the exchanges it would remove.
+        out = _verify_jaccard_packed(
+            sh,
+            pairs.select("id_a", "id_b"),
+            id_col,
+            threshold,
+            reduce_a=reduce_a,
+            reduce_b=reduce_b,
+        )
+    return out, (pairs,)
 
 
 def minhash_lsh_verified(
@@ -832,7 +589,6 @@ def minhash_lsh_verified(
     threshold: float = 0.3,
     max_bucket_size: int | None = None,
     hot_bucket_action: str = "error",
-    hash_verify_shingles: bool = True,
 ) -> DataFrame:
     """Fused candidates→verify near-dup pipeline over ONE shingle pass.
 
@@ -847,25 +603,18 @@ def minhash_lsh_verified(
     "stage the shingle table, then everything derives from it" pipeline
     layout (measured ~25% faster at sf0.1: 2.7→2.0 s steady-state).
 
-    Verification routes the shared seam (``_HASHED_VERIFY_IMPL`` —
-    :func:`_verify_jaccard_packed` since r11): each candidate pair joins
-    its two docs' packed ``array<long>`` DIGEST rows and intersections are
-    ``size(array_intersect(...))`` per pair.  The r7 array-free rule this
-    reverses targeted deceptively-compressible shingle STRING arrays; the
-    packed plan carries 8-byte digests hashed map-side, is bounded by the
-    engine-wide AQE broadcast cap, and measured ~2.5× less shuffle than
-    the exploded-digest plan on the dominant pair-expansion exchange
-    (sf10 A/B in the seam's docstring).
+    The candidates emerge size-annotated (r12): each pair carries both
+    docs' distinct shingle-set sizes, so a provable size-ratio prefilter
+    drops pairs that cannot reach ``threshold`` before any per-shingle
+    byte is paid, and :func:`_verify_jaccard` runs the packed digest
+    verify oriented by the smaller set.  On a big corpus that dispatch is
+    deliberately EAGER (shingle cache count + candidate barrier); on a
+    small one the whole operator stays one lazy plan.
 
     The banded relation is additionally persisted (as in
     :func:`minhash_lsh_candidates`): the self-join reads it twice, and
     without the pin each side would re-run the 8 md5 transforms over the
-    cached shingles.  Both pins release when the caller drops the result.
-
-    ``hash_verify_shingles`` (default on) runs that digest-keyed seam —
-    identical Jaccard values up to a ~2⁻⁶⁵·m² per-pair collision chance.
-    Turn it off to get the byte-exact string-keyed exploded plan
-    (:func:`_verify_jaccard_exploded`).
+    cached shingles.  All pins release when the caller drops the result.
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
@@ -877,40 +626,26 @@ def minhash_lsh_verified(
         )
         .persist()
     )
-
-    # r12 size-annotation (DEVNOTES r11 design (b)): when the packed seam +
-    # orientation are active, the shingle COUNT rides the banded relation
-    # (+8 B/row on its exchange) so candidates emerge size-annotated —
-    # enabling the provable size-ratio prefilter at candidate time and the
-    # smaller-side-oriented pair expansion in the verify.  Off-seam (the
-    # A/B reference variants) this is byte-for-byte the r11 plan.
-    # r15 (opt): seeded-min columns parse as SQL in one selectExpr gateway
-    # call (see minhash_signatures/_seeded_min_sql) — bit-identical nodes.
-    orient = hash_verify_shingles and sized_candidates_active()
-    sig_exprs = [f"`{id_col}`"]
-    if orient:
-        sig_exprs.append("size(__shs) AS __n")
-    sig_exprs += [
-        f"{_seeded_min_sql(i, '__shs')} AS minhash_{i}" for i in range(num_hashes)
-    ]
-    sig = sh.selectExpr(*sig_exprs)
+    # The shingle COUNT rides the banded relation (+8 B/row on its
+    # exchange) so candidates emerge size-annotated.  r15 (opt): the
+    # seeded-min columns parse as SQL in one selectExpr gateway call (see
+    # minhash_signatures/_seeded_min_sql) — bit-identical nodes.
+    sig = sh.selectExpr(
+        quote_ident(id_col),
+        "size(__shs) AS __n",
+        *(
+            f"{_seeded_min_sql(i, '__shs')} AS minhash_{i}"
+            for i in range(num_hashes)
+        ),
+    )
     banded = _bands_from_sig(
-        sig, id_col, num_hashes, bands, extra_cols=("__n",) if orient else ()
+        sig, id_col, num_hashes, bands, extra_cols=("__n",)
     ).persist()
     guarded = _bucket_guard(
         banded, id_col, max_bucket_size, hot_bucket_action, "minhash_lsh_verified"
     )
     a = guarded.alias("a")
     b = guarded.alias("b")
-    pair_cols = [
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-    ]
-    if orient:
-        pair_cols += [
-            F.col("a.__n").alias("__na"),
-            F.col("b.__n").alias("__nb"),
-        ]
     cand = (
         a.join(
             b,
@@ -920,60 +655,17 @@ def minhash_lsh_verified(
                 F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
             ],
         )
-        .select(*pair_cols)
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.__n").alias("__na"),
+            F.col("b.__n").alias("__nb"),
+        )
         .distinct()
     )
-    if orient:
-        # Provable cut BEFORE any per-shingle byte is paid for the pair
-        # (jaccard <= min/max; result-neutral, see the helper).
-        cand = _size_ratio_prefilter(cand, threshold)
-    if not hash_verify_shingles:
-        out = _verify_jaccard_exploded(sh, cand, id_col, threshold)
-        return scoped_persist(out, sh, banded)
-    # The semi-join-reduced verify consumes the candidate relation four
-    # times (two id sets + two probe sides): persist it — it is the SMALL
-    # product of the front half — and materialize it under one barrier
-    # action.  The barrier is LOAD-BEARING for the plan, not just for the
-    # cache-race contract: with the candidate sizes known before the main
-    # action, AQE plans the id-set semi-joins as broadcasts and the
-    # corpus-sized exploded relation never reaches an exchange (ov100:
-    # 444 MB total shuffle).  Left lazy, the exploded exchanges
-    # materialize concurrently with the id-set stages and the reduction
-    # never engages (1116 MB, barely below the 1234 MB baseline); a
-    # banded-bucket-derived superset was worse still (+456 MB — its
-    # derivation re-shuffles the banded relation and never broadcasts).
-    # A/B numbers in PROBE_r09 notes; the barrier also fills the
-    # sh/banded caches upstream, making the operator deliberately eager
-    # like dedup_incremental_near.
-    if _estimated_bytes(df) < _SEMIJOIN_MIN_INPUT_BYTES:
-        # Small (or unknown/Connect) corpus: the exploded relation is
-        # small enough that the reduction's fixed cost (an eager barrier
-        # action + distinct sets + broadcasts) exceeds the exchange it
-        # removes (+1.4 s at the 5k-doc rung, A/B'd) — plain digest
-        # verify, whole operator one lazy plan.  Gates-off by definition,
-        # so the size-annotated path orients (r12).
-        if orient:
-            out = _verify_jaccard_packed_oriented(sh, cand, id_col, threshold)
-        else:
-            out = _HASHED_VERIFY_IMPL(
-                sh, cand, id_col, threshold, reduce_a=False, reduce_b=False
-            )
-        return scoped_persist(out, sh, banded)
-    # Big corpus: the shared adaptive dispatch (_adaptive_hashed_verify)
-    # materializes the candidate relation — load-bearing: AQE sees its
-    # true size before the main action plans the filter semi-joins as
-    # broadcasts (left lazy, the exploded exchanges materialize
-    # concurrently and the reduction never engages: 1116 MB vs 444 MB at
-    # ov100) — and gates each side's reduction on its DISTINCT candidate
-    # id count (selective + broadcastable, per the helper's docstring).
-    # The sh.count() barrier fills the sh/banded caches before their
-    # concurrent verify consumers can race them (the r8
-    # dedup_incremental_near lesson) — amortized at this scale.
-    n_docs = sh.count()
-    out, cand = _adaptive_hashed_verify(
-        sh, cand, id_col, threshold, n_docs, sized=orient
-    )
-    return scoped_persist(out, sh, banded, cand)
+    cand = _size_ratio_prefilter(cand, threshold)
+    out, pins = _verify_jaccard(sh, cand, id_col, threshold, (df,), sized=True)
+    return scoped_persist(out, sh, banded, *pins)
 
 
 def minhash_lsh_candidates(
@@ -1143,7 +835,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    hash_verify_shingles: bool = True,
 ) -> DataFrame:
     """Exact pairwise Jaccard over word-shingle sets, pairs ≥ threshold.
 
@@ -1152,18 +843,14 @@ def ngram_jaccard_pairs(
     filter (the verification stage); standalone it is quadratic in docs that
     share a shingle — which is exactly the set it must inspect anyway.
 
-    ``hash_verify_shingles`` (default on, r11 — the last string-keyed
-    shuffle in the dedup family, VERDICT r10 task 1): the exploded shingle
-    column is narrowed to a 64-bit ``xxhash64`` digest BEFORE the persist,
-    so the self-join and the size aggregate shuffle 8-byte longs instead of
-    10-40-byte shingle strings, exactly as
-    :func:`_verify_jaccard_exploded_hashed` does for the candidates→verify
-    consumers (measured there: ~3× verify-stage byte cut, PROBE_r09/r10).
+    The exploded shingle column is narrowed to a 64-bit ``xxhash64``
+    digest BEFORE the persist (r11 — the last string-keyed shuffle in the
+    dedup family, VERDICT r10 task 1), so the self-join and the size
+    aggregate shuffle 8-byte longs instead of 10-40-byte shingle strings.
     Distinct-set sizes and intersection counts — hence every Jaccard
     value — are preserved exactly unless two distinct shingles of one pair
     collide in 64 bits (≈ m²/2⁶⁵ per pair; the failure mode is one Jaccard
-    nudged up, never a wrong join).  ``False`` restores the byte-exact
-    string-keyed plan.
+    nudged up, never a wrong join).
     """
     # The exploded shingle relation feeds three consumers (both join sides +
     # the size aggregate); persist so shingling runs once.  explode_outer:
@@ -1177,18 +864,14 @@ def ngram_jaccard_pairs(
             F.array_distinct(word_shingles(text_col, shingle_n))
         ).alias("sh"),
     )
-    if hash_verify_shingles:
-        # NULL-preserving digest: xxhash64 SKIPS null arguments (returns
-        # the bare seed hash, not NULL), which would collapse every
-        # null-text doc's placeholder row onto one shared join key — a
-        # spurious hot bucket joining all null docs pairwise.  The when()
-        # keeps the null-never-matches invariant of the string plan.
-        sh = sh.select(
-            F.col(id_col),
-            F.when(
-                F.col("sh").isNotNull(), F.xxhash64(F.col("sh"))
-            ).alias("sh"),
-        )
+    # NULL-preserving digest: xxhash64 SKIPS null arguments (returns the
+    # bare seed hash, not NULL), which would collapse every null-text doc's
+    # placeholder row onto one shared join key — a spurious hot bucket
+    # joining all null docs pairwise.  The when() keeps null never matching.
+    sh = sh.select(
+        F.col(id_col),
+        F.when(F.col("sh").isNotNull(), F.xxhash64(F.col("sh"))).alias("sh"),
+    )
     sh = sh.persist()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -1285,7 +968,6 @@ def jaccard_verify_pairs(
     shingle_n: int = 3,
     threshold: float = 0.3,
     assume_distinct: bool = False,
-    hash_verify_shingles: bool = True,
 ) -> DataFrame:
     """Exact Jaccard restricted to a candidate-pair relation ``(id_a, id_b)``
     — the LSH verification stage.
@@ -1293,13 +975,14 @@ def jaccard_verify_pairs(
     This is THE scale path for near-dup: :func:`ngram_jaccard_pairs` alone is
     quadratic in docs sharing a hot shingle (measured 15× superlinear on a
     10× corpus with duplicated docs), while candidates→verify touches only
-    the candidate edges.  Intersections are counted over narrow exploded
-    shingle rows (:func:`_verify_jaccard_exploded`) — the shuffle carries
-    ``(id, shingle)`` pairs, never arrays, so no side is broadcast-temptable
-    on deceptive compressed stats and nothing sorts wide records.
-    ``threshold`` must be > 0 (zero-overlap pairs drop out of the
-    intersection join — equivalent to the threshold filter for any
-    positive threshold).
+    the candidate edges.  Intersections are counted over packed 64-bit
+    shingle digests (:func:`_verify_jaccard_packed`) — identical Jaccard
+    values up to a ~2⁻⁶⁵·m² per-pair collision chance — through the shared
+    dispatch :func:`_verify_jaccard`: a corpus under Catalyst's 16 MB size
+    estimate keeps the whole operator ONE LAZY PLAN; above it the operator
+    is deliberately EAGER (shingle cache count + candidate barrier, so AQE
+    knows the semi-join filter sizes before the main action).
+    ``threshold`` must be > 0.
 
     If ``pairs`` came from a candidate generator that scoped-persisted its
     banded relation (:func:`minhash_lsh_candidates`), cache ownership is
@@ -1308,47 +991,24 @@ def jaccard_verify_pairs(
     though the caller typically drops the intermediate ``pairs`` handle
     (the round-3 ``dedup_lsh_verified`` regression).
 
-    ``assume_distinct``: the exploded-row verify COUNTS shared shingles per
-    (id_a, id_b) group, so duplicate candidate rows would multiply the
-    intersection count (r7 ADVICE).  The default therefore de-duplicates
-    the pair relation first — one extra same-keyed hash aggregate, no extra
+    ``assume_distinct``: duplicate candidate rows would publish duplicate
+    verified pairs (r7 ADVICE), so the default de-duplicates the pair
+    relation first — one extra same-keyed hash aggregate, no extra
     exchange when the generator already grouped on the pair key.  Callers
     whose candidate relation is distinct BY CONSTRUCTION (everything from
     :func:`minhash_lsh_candidates`, which ends in ``.distinct()``) pass
-    ``True`` to keep the verify plan identical to r7's.
+    ``True`` to skip it.
 
     Size-annotated pairs (r12): if ``pairs`` carries ``__na``/``__nb``
     (the two docs' DISTINCT shingle-set sizes, as emitted by
     :func:`minhash_lsh_candidates` ``with_sizes=True``), the verify applies
-    the provable size-ratio prefilter and — in the both-gates-off regime
-    under the packed seam — the smaller-side-oriented expansion.  CONTRACT:
-    the size columns must be functionally dependent on the ids and equal
-    the verify-side ``size(array_distinct(word_shingles(text, n)))``;
-    inconsistent annotations would survive the pair-distinct as duplicate
-    rows and mis-prefilter.  Pass generator-produced sizes or none.
-
-    ``hash_verify_shingles`` (default on, r10): intersections are counted
-    over 64-bit ``xxhash64`` shingle digests with the adaptive semi-join
-    reduction (:func:`_verify_jaccard_exploded_hashed`) — identical
-    Jaccard values up to a ~2⁻⁶⁵·m² per-pair collision chance, for the
-    measured ~3× verify-shuffle cut of PROBE_r09 (the r9
-    ``minhash_lsh_verified`` rework, adopted here per the r9 verdict).
-    Same adaptive gate: a corpus under Catalyst's 16 MB size estimate
-    keeps the whole operator ONE LAZY PLAN (digest keys, no reduction —
-    the reduction's fixed costs exceed the exchanges it removes there);
-    above it the operator is deliberately EAGER — the candidate relation
-    is persisted and counted so AQE knows the filter-set sizes before the
-    main action (the load-bearing barrier, A/B'd in PROBE_r09) and the
-    shingle cache materializes before its four concurrent verify
-    consumers can race it (the r8 lesson).  ``False`` restores the
-    byte-exact string-keyed r7 plan.
+    the provable size-ratio prefilter and — in the both-gates-off regime —
+    the smaller-side-oriented expansion.  CONTRACT: the size columns must
+    be functionally dependent on the ids and equal the verify-side
+    ``size(array_distinct(word_shingles(text, n)))``; inconsistent
+    annotations would survive the pair-distinct as duplicate rows and
+    mis-prefilter.  Pass generator-produced sizes or none.
     """
-    # Size-annotated pairs (r12): candidates carrying __na/__nb (from
-    # minhash_lsh_candidates(with_sizes=True)) ride the size-ratio
-    # prefilter and — in the both-gates-off regime under the packed seam —
-    # the smaller-side-oriented verify (DEVNOTES r11 design (b)).  The
-    # digest path strips or consumes the columns; the byte-exact string
-    # opt-out strips them so its plan is unchanged.
     sized = {"__na", "__nb"} <= set(pairs.columns)
     if sized:
         # ADVICE r12: the sized path used to trust caller-supplied sizes on
@@ -1387,8 +1047,7 @@ def jaccard_verify_pairs(
             # handle and the generator caches could unpersist early.
             pairs = transfer_cache_scope(pairs, pairs.drop("__na", "__nb"))
             sized = False
-    orient = sized and hash_verify_shingles and sized_candidates_active()
-    pair_cols = ["id_a", "id_b", "__na", "__nb"] if orient else ["id_a", "id_b"]
+    pair_cols = ["id_a", "id_b", "__na", "__nb"] if sized else ["id_a", "id_b"]
     if not assume_distinct:
         # Re-home any scoped cache pins onto the rebound handle: the
         # original `pairs` object dies at this rebind, and without the
@@ -1397,42 +1056,20 @@ def jaccard_verify_pairs(
         pairs = transfer_cache_scope(
             pairs, pairs.select(*pair_cols).distinct()
         )
-    elif not orient and sized:
-        pairs = transfer_cache_scope(pairs, pairs.select(*pair_cols))
-    if orient:
+    if sized:
         pairs = transfer_cache_scope(
             pairs, _size_ratio_prefilter(pairs, threshold)
         )
-    # Persist the per-doc shingle arrays: the relation feeds the exploded
-    # intersection sides AND the size relation, and without the pin the
-    # expensive shingle projection re-runs per consumer.  Scoped to the
-    # returned plan like the transferred candidate-cache pins.
+    # Persist the per-doc shingle arrays: the relation feeds both packed
+    # verify sides, and without the pin the expensive shingle projection
+    # re-runs per consumer.  Scoped to the returned plan like the
+    # transferred candidate-cache pins.
     sh = fan_out(df).select(
         F.col(id_col),
         F.array_distinct(word_shingles(text_col, shingle_n)).alias("__shs"),
     ).persist()
-    if not hash_verify_shingles:
-        out = _verify_jaccard_exploded(sh, pairs, id_col, threshold)
-        return scoped_persist(transfer_cache_scope(pairs, out), sh)
-    if _estimated_bytes(df) < _SEMIJOIN_MIN_INPUT_BYTES:
-        if orient:
-            out = _verify_jaccard_packed_oriented(sh, pairs, id_col, threshold)
-        else:
-            out = _HASHED_VERIFY_IMPL(
-                sh, pairs, id_col, threshold, reduce_a=False, reduce_b=False
-            )
-        return scoped_persist(transfer_cache_scope(pairs, out), sh)
-    # Big corpus: the shared adaptive dispatch (barrier + per-side
-    # distinct-id gates — _adaptive_hashed_verify's docstring has the
-    # evidence trail).  The caller-owned pairs handle itself is never
-    # persisted (r10 review) — only the helper's private projection,
-    # whose pin is scoped to the returned plan; the caller's generator
-    # pins still transfer off the original handle.
-    n_docs = sh.count()  # materializes the shingle cache (r8 race lesson)
-    out, pairs_p = _adaptive_hashed_verify(
-        sh, pairs, id_col, threshold, n_docs, sized=orient
-    )
-    return scoped_persist(transfer_cache_scope(pairs, out), sh, pairs_p)
+    out, pins = _verify_jaccard(sh, pairs, id_col, threshold, (df,), sized=sized)
+    return scoped_persist(transfer_cache_scope(pairs, out), sh, *pins)
 
 
 def dedup_incremental_exact(
@@ -1599,12 +1236,8 @@ def dedup_incremental_near(
         new_df, store_df, text_col, id_col, num_hashes, bands, shingle_n,
         max_bucket_size, hot_bucket_action,
     )
-    # Array-free verification (r7, same rationale as
-    # :func:`_verify_jaccard_exploded`): the STORE-side shingle arrays are
-    # O(corpus) and compress deceptively well — an engine-chosen broadcast
-    # of them is the same latent OOM the sf10 probe exposed on the
-    # self-verify path.  The delta/store id spaces are disjoint by contract,
-    # so one unioned shingle relation serves both exploded sides.
+    # The delta/store id spaces are disjoint by contract, so one unioned
+    # shingle relation serves both verify sides.
     sh = (
         fan_out(new_df.select(id_col, text_col))
         .unionByName(fan_out(store_df.select(id_col, text_col)))
@@ -1614,55 +1247,27 @@ def dedup_incremental_near(
         )
         .persist()
     )
-    # Materialization barrier (r8): the verify reads `sh` from FOUR stages
-    # (two exploded join sides + two size joins) that AQE submits
-    # concurrently.  Left lazy, those stages race the unmaterialized cache
-    # — per-partition block locks serialize the racers while their tasks
-    # HOLD executor slots, collapsing parallelism: measured 530 s cold on
-    # the ov100 fixture (500k-doc store) vs 121 s with the cache
-    # materialized under this one barrier action first (the whole 4.3×
-    # r7→r8 win on this operator; PROBE_OPENVOCAB_r08).  The count is one
-    # cheap agg over the cache being built anyway; the operator is
+    # Materialization barrier (r8), on BOTH legs of the dispatch: the
+    # verify reads `sh` from stages that AQE submits concurrently.  Left
+    # lazy, those stages race the unmaterialized cache — per-partition
+    # block locks serialize the racers while their tasks HOLD executor
+    # slots, collapsing parallelism: measured 530 s cold on the ov100
+    # fixture (500k-doc store) vs 121 s with the cache materialized under
+    # this one barrier action first (PROBE_OPENVOCAB_r08).  The count is
+    # one cheap agg over the cache being built anyway; the operator is
     # therefore deliberately EAGER about its shingle cache.
     n_docs = sh.count()
     pairs = cand.select(
         F.col("id_new").alias("id_a"), F.col("id_store").alias("id_b")
     )
-    # r10: hashed/semi-join verify adopted from the r9 minhash_lsh_verified
-    # rework (PROBE_r09 A/B evidence) — digest keys unconditional, the
-    # reduction gated PER SIDE through the shared dispatch because this
-    # shape is asymmetric: side A ids ⊆ the DELTA (a tiny distinct set
-    # even when the store is saturated and each delta doc matches many
-    # store docs — the distinct-id gate engages there, where the old
-    # pair-count proxy wrongly disqualified it); side B ids are matched
-    # STORE docs, gated by the same selectivity + broadcastability test
-    # against the union relation.
-    #
-    # Small inputs (Catalyst estimate, either side unknown → small) skip
-    # the reduction and the extra candidate barrier entirely — the fixed
-    # costs exceed the exchanges removed there (+1.4 s at the 5k-doc
-    # rung, A/B'd r9).
-    est_new, est_store = _estimated_bytes(new_df), _estimated_bytes(store_df)
-    if (
-        est_new < 0
-        or est_store < 0
-        or est_new + est_store < _SEMIJOIN_MIN_INPUT_BYTES
-    ):
-        verified = _HASHED_VERIFY_IMPL(
-            sh, pairs, id_col, threshold, reduce_a=False, reduce_b=False
-        )
-        matched = (
-            verified.select(F.col("id_a").alias(id_col)).distinct().persist()
-        )
-        out = new_df.join(matched, id_col, "left_anti")
-        return scoped_persist(transfer_cache_scope(cand, out), sh, matched)
-    # Candidate barrier + per-side gates via the shared dispatch (the
-    # candidate generator's pins re-home onto the persisted projection,
-    # then onto the plan actually returned).
-    verified, pairs_p = _adaptive_hashed_verify(
-        sh, pairs, id_col, threshold, n_docs
+    # The per-side reduction gates matter most for this asymmetric shape:
+    # side A ids ⊆ the DELTA (a tiny distinct set even when the store is
+    # saturated and each delta doc matches many store docs); side B ids
+    # are matched STORE docs, gated by the same selectivity +
+    # broadcastability test against the union relation.
+    verified, pins = _verify_jaccard(
+        sh, pairs, id_col, threshold, (new_df, store_df), n_docs=n_docs
     )
-    pairs_p = transfer_cache_scope(cand, pairs_p)
     # Pin the matched-id set (r13): Catalyst pushes LeftAnti joins THROUGH
     # a Union in the left side (PushdownLeftSemiAntiJoin), duplicating the
     # right subtree per union branch — and production deltas ARE unions
@@ -1671,25 +1276,21 @@ def dedup_incremental_near(
     # once per branch (sf10mf profile: every verify exchange appeared
     # twice, ~2× the committed bytes).  `matched` is ids-only and bounded
     # by |delta| — the cheapest possible barrier against the duplication.
-    # r14 (broadcast audit): the final anti-join itself planned as
-    # SortMergeJoin LeftAnti at sf10mf — AQE refused to broadcast the
-    # matched-id set (aggregate-over-join estimate, same guesswork class
-    # as the r13 semi-join refusals) and the full-TEXT delta shuffled on
-    # the id key just to drop matched rows.  The set is counted (the
-    # count doubles as the pin's materialization barrier — this operator
-    # is deliberately eager already) and explicitly broadcast under the
-    # same ``_SEMIJOIN_MAX_IDS`` budget as the reduction gates; above the
-    # gate the sort-merge shape is the right plan and stands.
+    # r14 (broadcast audit): on the big-corpus leg the final anti-join
+    # planned as SortMergeJoin LeftAnti at sf10mf — AQE refused to
+    # broadcast the matched-id set (aggregate-over-join estimate) and the
+    # full-TEXT delta shuffled on the id key just to drop matched rows.
+    # There the set is counted (the count doubles as the pin's
+    # materialization barrier) and explicitly broadcast under the same
+    # ``_SEMIJOIN_MAX_IDS`` budget as the reduction gates; above the gate
+    # the sort-merge shape is the right plan and stands.  The small leg
+    # (no pins) runs no such count.
     matched = verified.select(F.col("id_a").alias(id_col)).distinct().persist()
-    matched_side = (
-        F.broadcast(matched)
-        if matched.count() <= _SEMIJOIN_MAX_IDS
-        else matched
-    )
+    matched_side = matched
+    if pins and matched.count() <= _SEMIJOIN_MAX_IDS:
+        matched_side = F.broadcast(matched)
     out = new_df.join(matched_side, id_col, "left_anti")
-    return scoped_persist(
-        transfer_cache_scope(pairs_p, out), sh, pairs_p, matched
-    )
+    return scoped_persist(transfer_cache_scope(cand, out), sh, *pins, matched)
 
 
 def connected_components(

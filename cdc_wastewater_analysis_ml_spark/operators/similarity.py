@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.readers import fan_out
+from .text import quote_ident
 
 
 def _cos_scorer_udf():
@@ -109,8 +110,10 @@ def cosine_topk_bruteforce(
     )
 
 
-def rhp_sign(vec: Column, plane: int, dims: int) -> Column:
+def rhp_sign(vec: Column | str, plane: int, dims: int) -> Column:
     """Sign bit of ⟨vec, h_plane⟩ for the md5-derived ±1 hyperplane h.
+    ``vec`` is a Column or a column NAME; a name takes the one-gateway-call
+    SQL path described below.
 
     r14 (opt): the ±1 coefficients are md5-of-CONSTANTS (``p{plane}:{dim}``)
     — but expressed as a Catalyst ``transform`` lambda they are opaque to
@@ -137,7 +140,7 @@ def rhp_sign(vec: Column, plane: int, dims: int) -> Column:
     signatures stay bit-identical (equivalence pinned by test against the
     Arrow-path derivation)."""
     if isinstance(vec, str):
-        return F.expr(_rhp_sign_sql(f"`{vec}`", plane, dims))
+        return F.expr(_rhp_sign_sql(quote_ident(vec), plane, dims))
     # Column-argument path (API compat): same plan via Column ops.
     coeff = F.expr(
         "array("
@@ -176,7 +179,9 @@ def rhp_signature(
     signature build instead of ~700 (see :func:`rhp_sign`)."""
     sig = F.expr(
         "concat("
-        + ",".join(_rhp_sign_sql(f"`{vec_col}`", p, dims) for p in range(planes))
+        + ",".join(
+            _rhp_sign_sql(quote_ident(vec_col), p, dims) for p in range(planes)
+        )
         + ")"
     )
     return df.select(F.col(id_col), F.col(vec_col), sig.alias("rhp_sig"))
@@ -412,7 +417,7 @@ def recall_at_k(truth: DataFrame, approx: dict[str, DataFrame]) -> DataFrame:
                 F.col("truth_n"),
                 # Raw IEEE quotient of two exact integers — bit-identical
                 # cross-engine, so no 6dp guard (r11, the integer-quotient
-                # rule; see _verify_jaccard_exploded_hashed).
+                # rule; see dedup._verify_jaccard_packed).
                 (F.col("hits") / F.col("truth_n")).alias("recall"),
             )
         )

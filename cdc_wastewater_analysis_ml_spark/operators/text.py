@@ -23,6 +23,14 @@ def normalize_text(c: Column | str) -> Column:
     return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a SQL identifier for rendered expression strings: every
+    backtick doubled, the whole wrapped in backticks — so any column name
+    (spaces, dots, backticks) parses as exactly one column reference.  Every
+    site that renders a column name into SQL text quotes through here."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def tokenize(c: Column | str) -> Column:
     """Whitespace tokenization → array<string> (empty-safe).
 
@@ -43,7 +51,7 @@ def tokenize(c: Column | str) -> Column:
     arguments.
     """
     if isinstance(c, str):
-        return F.expr(_tokenize_sql(f"`{c}`"))
+        return F.expr(_tokenize_sql(quote_ident(c)))
     return F.split(F.trim(F.lower(c)), r"\s+")
 
 
@@ -80,7 +88,7 @@ def word_shingles(c: Column | str, n: int = 3) -> Column:
     subtree in the plan exactly like the repeated SQL text does).
     """
     if isinstance(c, str):
-        toks = _tokenize_sql(f"`{c}`")
+        toks = _tokenize_sql(quote_ident(c))
         return F.expr(
             f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
             f"i -> array_join(slice({toks}, i, {n}), ' '))"

@@ -82,9 +82,7 @@ def q_dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was missed then.  Semantically identical by the fused operator's
     # contract (min over distinct shingles == min over all shingles; same
     # banding, same threshold, same raw-quotient jaccard) — oracle text
-    # unchanged, parity re-verified at 3 SFs.  Seam state (sized
-    # candidates / packed verify / orientation) is honored inside the
-    # fused operator, so tools/verify_ab.py A/Bs keep working.
+    # unchanged, parity re-verified at 3 SFs.
     verified = D.minhash_lsh_verified(
         docs, "text", "doc_id", num_hashes=8, bands=4, threshold=0.3
     )
@@ -1004,12 +1002,13 @@ def q_pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "text")
 
     w = Window.partitionBy(T.fingerprint("text")).orderBy("doc_id")
-    # ded feeds TWO consumers (the LSH stage and the final keep-survivors
-    # anti join) but is deliberately NOT persisted: caching it materializes
-    # the full corpus TEXT into executor memory and breaks codegen across
-    # the window, measured SLOWER at sf0.1 (6.8 vs 5.8 s median) than
-    # recomputing the scan → gate → fingerprint-window chain, and at 100 TB
-    # an O(corpus-text) cache is exactly what not to pin.
+    # ded feeds ONE consumer, the LSH stage (minhash_lsh_verified): the
+    # survivor branch below recomputes the gate → keep-min window over a
+    # narrow projection (qual_n/ded_n).  It is deliberately NOT persisted:
+    # caching it materializes the full corpus TEXT into executor memory
+    # and breaks codegen across the window (measured SLOWER at sf0.1, 6.8
+    # vs 5.8 s median, when it still fed two consumers), and at 100 TB an
+    # O(corpus-text) cache is exactly what not to pin.
     ded = (
         qual.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -1017,9 +1016,9 @@ def q_pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # r7 design note: the r6 per-call-site merge hint was DELETED.  The
-    # verify stage joins narrow exploded (id, shingle) rows (never shingle
-    # arrays), and the engine-wide RUNTIME_CONFS 4 MB caps on both
-    # autoBroadcastJoinThreshold confs forbid compressed-stats
+    # verify stage joins 64-bit digest arrays hashed map-side (never
+    # shingle strings), and the engine-wide RUNTIME_CONFS 4 MB caps on
+    # both autoBroadcastJoinThreshold confs forbid compressed-stats
     # mis-broadcasts — the 100× probe showed every automatic size signal
     # Spark reads is compressed while text expands 20-40× in memory.
     pairs = D.minhash_lsh_verified(

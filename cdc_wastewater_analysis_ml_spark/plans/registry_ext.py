@@ -494,7 +494,7 @@ def q_ngram_jaccard(spark, sf_dir):
     r11: publishes the RAW IEEE quotient — both operands are exact
     integers, so the single division is bit-identical cross-engine and the
     house 6dp round only added the .5-at-the-7th-digit boundary class
-    (see _verify_jaccard_exploded_hashed).  The operator self-joins on
+    (see dedup._verify_jaccard_packed).  The operator self-joins on
     64-bit shingle digests by default (VERDICT r10 task 1)."""
     return D.ngram_jaccard_pairs(
         _augmented_docs(spark, sf_dir), "text", "doc_id", shingle_n=3, threshold=0.5

@@ -68,6 +68,10 @@ def scan_csv(
 #: part-file overwrite that keeps the filename need not bump the
 #: directory's own mtime or size, so the r14 dir-stat key could serve a
 #: stale schema across a schema-changing rewrite in a long-lived session.
+#: A directory with SUBDIRECTORIES (hive partitions, ``p=1/part-*``)
+#: skips the memo: a nested rewrite changes neither the root's stat nor
+#: any top-level leaf, and a parent directory's mtime does not reflect
+#: changes below its direct children.
 _SCHEMA_CACHE: dict[tuple, StructType] = {}
 
 
@@ -83,9 +87,10 @@ def _schema_cache_key(path: str) -> tuple | None:
             leaves = []
             with os.scandir(path) as it:
                 for e in it:
+                    if e.is_dir():
+                        return None
                     # data files only: _SUCCESS/._committed markers churn
-                    # without schema meaning; nested dirs (hive partitions)
-                    # fall back to their own mtimes via the dir stat.
+                    # without schema meaning.
                     if e.is_file() and not e.name.startswith(("_", ".")):
                         est = e.stat()
                         leaves.append((e.name, est.st_mtime_ns, est.st_size))

@@ -195,11 +195,11 @@ def test_recall_at_k_rejects_empty_approx(spark):
 
 
 def test_jaccard_verify_pairs_default_dedups_candidate_rows(spark, sf_small):
-    """r7 ADVICE: the exploded verify COUNTS shared shingles per pair group,
-    so duplicate (id_a, id_b) candidate rows used to multiply the
-    intersection and inflate Jaccard.  The default now de-duplicates the
-    pair relation inside the operator; assume_distinct=True preserves the
-    r7 hot-path plan for generators that are distinct by construction."""
+    """r7 ADVICE: duplicate (id_a, id_b) candidate rows must not change the
+    verified output (the r7 exploded verify multiplied the intersection;
+    the packed verify would publish duplicate pairs).  The default
+    de-duplicates the pair relation inside the operator; assume_distinct=True
+    skips that for generators that are distinct by construction."""
     docs = load_table(spark, sf_small, "documents").limit(200)
     pairs = D.minhash_lsh_candidates(docs, "text", "doc_id")
     clean = sorted(
@@ -301,3 +301,43 @@ def test_get_spark_preserves_a_live_sessions_confs(spark):
     with _warnings.catch_warnings():
         _warnings.simplefilter("error")
         assert get_spark() is spark
+
+
+def test_backtick_column_names_through_sql_rendered_ops(spark, sf_small):
+    """ADVICE r15 #2: the SQL-rendered paths wrapped identifiers in bare
+    backticks, so a text column whose name contains a backtick broke every
+    shingle consumer with a ParseException.  Each rendering site now
+    escapes through one quoting helper: the fused LSH verify, the n-gram
+    Jaccard, tokenize and rhp_sign must accept the odd name and return
+    exactly what the plain-named column returns."""
+    from cdc_wastewater_analysis_ml_spark.operators import similarity as SIM
+    from cdc_wastewater_analysis_ml_spark.operators import text as T
+
+    odd = "we`ird"
+    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
+    renamed = docs.withColumnRenamed("text", odd)
+
+    def rows(df, *cols):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    pair_cols = ("id_a", "id_b", "jaccard")
+    assert rows(D.minhash_lsh_verified(renamed, odd, "doc_id"), *pair_cols) == rows(
+        D.minhash_lsh_verified(docs, "text", "doc_id"), *pair_cols
+    )
+    assert rows(D.ngram_jaccard_pairs(renamed, odd, "doc_id"), *pair_cols) == rows(
+        D.ngram_jaccard_pairs(docs, "text", "doc_id"), *pair_cols
+    )
+    assert rows(
+        renamed.select("doc_id", T.tokenize(odd).alias("t")), "doc_id", "t"
+    ) == rows(docs.select("doc_id", T.tokenize("text").alias("t")), "doc_id", "t")
+
+    emb = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
+    dims = len(emb.first()["embedding"])
+    odd_emb = emb.withColumnRenamed("embedding", odd)
+    assert rows(
+        odd_emb.select("vec_id", SIM.rhp_sign(odd, 0, dims).alias("s")),
+        "vec_id", "s",
+    ) == rows(
+        emb.select("vec_id", SIM.rhp_sign("embedding", 0, dims).alias("s")),
+        "vec_id", "s",
+    )

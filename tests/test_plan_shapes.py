@@ -504,7 +504,7 @@ def test_lsh_verify_packed_digest_arrays(spark, sf_small):
     ``size(array_intersect(...))`` per pair — the exploded-digest plan
     replicated every pair once per shingle through the pair-expansion
     exchange, and the sf10 A/B cut that stage ~3× at bit-identical results
-    (tools/verify_ab.py; 5527→2203 MB, 81→36 s).  The r7 concern (string
+    (PROBE_r11; 5527→2203 MB, 81→36 s).  The r7 concern (string
     arrays compress deceptively → engine-chosen broadcast OOM) is carried
     by two guards the plan must keep: the arrays that reach a join are
     64-bit digests hashed map-side (8 B/element, not 10-40 B strings), and
@@ -526,7 +526,9 @@ def test_sql_rendered_text_ops_match_column_forms(spark):
     Column form — any divergence is a silent result change across every
     shingle/tokenize consumer.  Pinned on analyzed plans (expr IDs and
     lambda variable names normalized away) plus values on the edge corpus
-    (whitespace runs, empty, null, <n tokens)."""
+    (whitespace runs, empty, null, <n tokens).  The column names include
+    one with a backtick: the rendered identifier must be escaped
+    (quote_ident), not break the parse."""
     from cdc_wastewater_analysis_ml_spark.operators import text as T
 
     df = spark.createDataFrame(
@@ -539,7 +541,7 @@ def test_sql_rendered_text_ops_match_column_forms(spark):
             (6, "a b c d e f g"),
         ],
         "id long, text string",
-    )
+    ).withColumn("we`ird", F.col("text"))
 
     def _norm(plan: str) -> str:
         return re.sub(r"#\d+", "#", re.sub(r"lambda [a-z_0-9]+", "lambda v", plan))
@@ -550,10 +552,11 @@ def test_sql_rendered_text_ops_match_column_forms(spark):
         (lambda c: T.word_shingles(c, 3),),
         (lambda c: T.word_shingles(c, 5),),
     ]
-    for (fn,) in cases:
-        a = df.select(fn("text").alias("o")).orderBy("id")
-        b = df.select(fn(F.col("text")).alias("o")).orderBy("id")
-        pa = _norm(a._jdf.queryExecution().analyzed().toString())
-        pb = _norm(b._jdf.queryExecution().analyzed().toString())
-        assert pa == pb, f"{pa}\n!=\n{pb}"
-        assert [r.o for r in a.collect()] == [r.o for r in b.collect()]
+    for name in ("text", "we`ird"):
+        for (fn,) in cases:
+            a = df.select(fn(name).alias("o")).orderBy("id")
+            b = df.select(fn(F.col(T.quote_ident(name))).alias("o")).orderBy("id")
+            pa = _norm(a._jdf.queryExecution().analyzed().toString())
+            pb = _norm(b._jdf.queryExecution().analyzed().toString())
+            assert pa == pb, f"{pa}\n!=\n{pb}"
+            assert [r.o for r in a.collect()] == [r.o for r in b.collect()]

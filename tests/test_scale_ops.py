@@ -299,25 +299,53 @@ def test_fused_lsh_verified_matches_two_stage_composition(spark, sf_small):
     )
 
 
+def _shingle_sets(docs, n=3):
+    """doc_id -> distinct word-shingle list, straight from word_shingles;
+    null text yields ``[None]``."""
+    return {
+        r.doc_id: r.s
+        for r in docs.select(
+            "doc_id", F.array_distinct(D.word_shingles("text", n)).alias("s")
+        ).collect()
+    }
+
+
+def _py_jaccard(sets, pairs, threshold):
+    """Pure-Python string-keyed reference verify over ``pairs``: the raw
+    IEEE quotient of exact integers (what the engine publishes); a null
+    shingle counts toward its set's size but never intersects."""
+    out = {}
+    for a, b in pairs:
+        sa, sb = set(sets[a]), set(sets[b])
+        inter = len((sa & sb) - {None})
+        jac = inter / (len(sa) + len(sb) - inter)
+        if jac >= threshold:
+            out[(a, b)] = jac
+    return out
+
+
+def _lsh_candidates(docs):
+    return {
+        (r.id_a, r.id_b)
+        for r in D.minhash_lsh_candidates(docs, "text", "doc_id").collect()
+    }
+
+
+def _verified(df):
+    return {(r.id_a, r.id_b): r.jaccard for r in df.collect()}
+
+
 def test_lsh_verified_digest_verify_matches_string_verify(spark, sf_small):
-    """hash_verify_shingles narrows the verify-stage join keys to 64-bit
-    xxhash64 digests — a shuffle-bytes optimization (r8 VERDICT task 2)
-    that must leave the pair set and every Jaccard value bit-identical on
-    any real corpus (collisions are ~2^-65 per shingle pair; on this
-    fixture there are none, so strict equality is the contract)."""
+    """The fused operator verifies over 64-bit xxhash64 shingle digests —
+    the pair set and every Jaccard value must be bit-identical to a
+    string-keyed verify of the same candidates (collisions are ~2^-65 per
+    shingle pair; on this fixture there are none, so strict equality is
+    the contract).  The reference is the pure-Python verify above."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    string_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_verified(
-            docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=False
-        ).collect()
-    }
-    digest_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_verified(
-            docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=True
-        ).collect()
-    }
+    digest_keyed = _verified(
+        D.minhash_lsh_verified(docs, "text", "doc_id", threshold=0.3)
+    )
+    string_keyed = _py_jaccard(_shingle_sets(docs), _lsh_candidates(docs), 0.3)
     assert digest_keyed == string_keyed and len(digest_keyed) > 0
 
 
@@ -331,9 +359,7 @@ def test_lsh_verified_digest_verify_hashes_before_exchange(spark, sf_small):
     xxhash64 appears in the same whole-stage-codegen subtree as the
     generate (explode), i.e. between Generate and the first Exchange."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    out = D.minhash_lsh_verified(
-        docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=True
-    )
+    out = D.minhash_lsh_verified(docs, "text", "doc_id", threshold=0.3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "xxhash64" in plan
     # every xxhash64 projection is computed directly over the generated
@@ -353,38 +379,6 @@ def test_lsh_verified_digest_verify_hashes_before_exchange(spark, sf_small):
     first_exchange = next(i for i, l in enumerate(lines) if "Exchange" in l)
     first_hash = next(i for i, l in enumerate(lines) if "xxhash64" in l)
     assert first_hash > first_exchange, plan[:2000]
-
-
-def test_packed_verify_matches_exploded_and_string(spark, sf_small):
-    """r11 (VERDICT r10 task 3): the packed-array digest verify — adopted
-    after the sf10 A/B cut the dominant pair-expansion exchange ~3×
-    (tools/verify_ab.py; numbers in DEVNOTES/PROBE_r11) — must produce the
-    SAME pair set and bit-identical raw-quotient Jaccard values as both the
-    exploded-digest plan and the byte-exact string plan."""
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-
-    def run(impl):
-        old = D._HASHED_VERIFY_IMPL
-        D._HASHED_VERIFY_IMPL = impl
-        try:
-            return {
-                (r.id_a, r.id_b): r.jaccard
-                for r in D.minhash_lsh_verified(
-                    docs, "text", "doc_id", threshold=0.3
-                ).collect()
-            }
-        finally:
-            D._HASHED_VERIFY_IMPL = old
-
-    packed = run(D._verify_jaccard_packed)
-    exploded = run(D._verify_jaccard_exploded_hashed)
-    string_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_verified(
-            docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=False
-        ).collect()
-    }
-    assert packed == exploded == string_keyed and len(packed) > 0
 
 
 def test_packed_verify_drops_zero_intersection_pairs(spark):
@@ -498,23 +492,19 @@ def test_freqitems_gate_excludes_exact_support_boundary(spark, tmp_path):
 
 def test_ngram_jaccard_digest_matches_string_keys(spark, sf_small):
     """r11 (VERDICT r10 task 1): ngram_jaccard_pairs self-joins on 64-bit
-    xxhash64 shingle digests by default — the last string-keyed shuffle in
-    the dedup family.  The pair set and every raw-quotient Jaccard value
-    must be bit-identical to the string-keyed opt-out on any real corpus
-    (collisions ~2^-65 per shingle pair; none on this fixture)."""
+    xxhash64 shingle digests — the last string-keyed shuffle in the dedup
+    family.  The pair set and every raw-quotient Jaccard value must be
+    bit-identical to a string-keyed all-pairs verify (the pure-Python
+    reference; collisions ~2^-65 per shingle pair, none on this
+    fixture)."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    string_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(
-            docs, "text", "doc_id", threshold=0.2, hash_verify_shingles=False
-        ).collect()
-    }
-    digest_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(
-            docs, "text", "doc_id", threshold=0.2, hash_verify_shingles=True
-        ).collect()
-    }
+    digest_keyed = _verified(
+        D.ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.2)
+    )
+    sets = _shingle_sets(docs)
+    ids = sorted(sets)
+    all_pairs = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1 :]]
+    string_keyed = _py_jaccard(sets, all_pairs, 0.2)
     assert digest_keyed == string_keyed and len(digest_keyed) > 0
 
 
@@ -537,28 +527,21 @@ def test_ngram_jaccard_digest_null_text_never_pairs(spark):
         "doc_id long, text string",
     )
     rows = D.ngram_jaccard_pairs(
-        docs, "text", "doc_id", threshold=0.1, hash_verify_shingles=True
+        docs, "text", "doc_id", threshold=0.1
     ).collect()
     assert {(r.id_a, r.id_b) for r in rows} == {(4, 5)}
     assert rows[0].jaccard == 1.0
 
 
 def test_verify_null_text_never_pairs(spark):
-    """r12 ADVICE: the digest VERIFY implementations must not pair
-    null-text docs either.  word_shingles(null text) yields ``[NULL]``;
-    xxhash64 SKIPS null args and returns the bare seed hash, so an
-    unguarded digest (exploded) or digest ARRAY (packed — and there
-    ``array_intersect`` even matches NULL elements, unlike an equi-join)
-    would publish jaccard=1.0 for user-supplied pairs of null-text docs
-    where the byte-exact string plan returns nothing.  LSH registry
-    queries never hit this (null docs band-match nothing), but
-    :func:`jaccard_verify_pairs` takes CALLER-supplied pairs."""
-    from cdc_wastewater_analysis_ml_spark.operators.dedup import (
-        _verify_jaccard_exploded_hashed,
-        _verify_jaccard_packed,
-        word_shingles,
-    )
-
+    """r12 ADVICE: the digest verify plans must not pair null-text docs.
+    word_shingles(null text) yields ``[NULL]``; xxhash64 SKIPS null args
+    and returns the bare seed hash, so an unguarded digest ARRAY (and
+    ``array_intersect`` even matches NULL elements) would publish
+    jaccard=1.0 for user-supplied pairs of null-text docs where a
+    string-keyed verify returns nothing.  LSH registry queries never hit
+    this (null docs band-match nothing), but :func:`jaccard_verify_pairs`
+    takes CALLER-supplied pairs."""
     docs = spark.createDataFrame(
         [
             (1, None),
@@ -569,36 +552,34 @@ def test_verify_null_text_never_pairs(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (4, 5)], "id_a long, id_b long"
-    )
+    pair_rows = [(1, 2), (1, 3), (2, 3), (4, 5)]
+    pairs = spark.createDataFrame(pair_rows, "id_a long, id_b long")
     expected = {(4, 5): 1.0}
-    # Operator level, both seam settings: identical to the string plan.
-    for hashed in (True, False):
-        got = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in D.jaccard_verify_pairs(
-                docs, pairs, "text", "doc_id",
-                threshold=0.1, hash_verify_shingles=hashed,
-            ).collect()
-        }
-        assert got == expected, f"hash_verify_shingles={hashed}: {got}"
-    # Both hashed impls directly (the seam hides whichever isn't default).
+    assert _py_jaccard(_shingle_sets(docs), pair_rows, 0.1) == expected
+    # Operator level.
+    got = _verified(
+        D.jaccard_verify_pairs(docs, pairs, "text", "doc_id", threshold=0.1)
+    )
+    assert got == expected, got
+    # The unoriented plan directly, every reduction-flag combination.
     sh = docs.select(
         F.col("doc_id"),
-        F.array_distinct(word_shingles("text", 3)).alias("__shs"),
+        F.array_distinct(D.word_shingles("text", 3)).alias("__shs"),
     ).persist()
+    pairs = pairs.persist()
+    pairs.count()
     try:
-        for impl in (_verify_jaccard_packed, _verify_jaccard_exploded_hashed):
-            got = {
-                (r.id_a, r.id_b): r.jaccard
-                for r in impl(
-                    sh, pairs, "doc_id", 0.1, reduce_a=False, reduce_b=False
-                ).collect()
-            }
-            assert got == expected, f"{impl.__name__}: {got}"
+        for ra in (False, True):
+            for rb in (False, True):
+                got = _verified(
+                    D._verify_jaccard_packed(
+                        sh, pairs, "doc_id", 0.1, reduce_a=ra, reduce_b=rb
+                    )
+                )
+                assert got == expected, (ra, rb, got)
     finally:
         sh.unpersist()
+        pairs.unpersist()
 
 
 def test_lsh_candidates_with_sizes_annotation_is_exact(spark, sf_small):
@@ -631,33 +612,35 @@ def test_lsh_candidates_with_sizes_annotation_is_exact(spark, sf_small):
 def test_oriented_verify_matches_all_plans(spark, sf_small):
     """r12 (DEVNOTES r11 design (b)): the size-annotated oriented verify —
     smaller-side pair expansion + size-ratio prefilter — must be a pure
-    plan optimization: identical pair set and bit-identical raw-quotient
-    jaccard values as the unoriented packed seam AND the exploded-hashed
-    reference, through the full fused operator."""
-    import cdc_wastewater_analysis_ml_spark.operators.dedup as DD
-
+    plan optimization: the fused operator (oriented), the composed
+    operator on sized candidates (oriented) and on unsized candidates
+    (unoriented packed plan) return the same pair set with bit-identical
+    raw-quotient jaccard values, equal to the pure-Python reference."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
 
-    def run():
-        return sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in DD.minhash_lsh_verified(
-                docs, "text", "doc_id", threshold=0.3
-            ).collect()
+    def composed(with_sizes):
+        pairs = D.minhash_lsh_candidates(
+            docs, "text", "doc_id", with_sizes=with_sizes
+        )
+        return D.jaccard_verify_pairs(
+            docs, pairs, "text", "doc_id", threshold=0.3, assume_distinct=True
         )
 
-    oriented = run()
-    assert len(oriented) > 0
-    try:
-        DD._ORIENT_SIZED_VERIFY = False
-        unoriented = run()
-        DD._HASHED_VERIFY_IMPL = DD._verify_jaccard_exploded_hashed
-        DD._ORIENT_SIZED_VERIFY = True  # no-op off the packed seam
-        exploded = run()
-    finally:
-        DD._ORIENT_SIZED_VERIFY = True
-        DD._HASHED_VERIFY_IMPL = DD._verify_jaccard_packed
-    assert oriented == unoriented == exploded
+    fused_df, sized_df, unsized_df = (
+        D.minhash_lsh_verified(docs, "text", "doc_id", threshold=0.3),
+        composed(True),
+        composed(False),
+    )
+
+    def oriented(df):
+        return "__k_small" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    # Non-vacuous: the three really are the two different plans.
+    assert oriented(fused_df) and oriented(sized_df)
+    assert not oriented(unsized_df)
+    ref = _py_jaccard(_shingle_sets(docs), _lsh_candidates(docs), 0.3)
+    fused, sized, unsized = map(_verified, (fused_df, sized_df, unsized_df))
+    assert fused == sized == unsized == ref and len(ref) > 0
 
 
 def test_oriented_verify_null_text_and_asymmetric_sizes(spark):
@@ -725,72 +708,60 @@ def test_oriented_verify_null_text_and_asymmetric_sizes(spark):
 
 
 def test_lsh_verified_semijoin_reduction_matches_unreduced(spark, sf_small):
-    """The engaged semi-join reduction (big-corpus path — fixtures too
-    small to trigger it through the operator) must be a pure plan
-    optimization: same pairs, same Jaccard values as the unreduced digest
-    verify.  Driven through the helper with a persisted candidate
-    relation, per its contract."""
-    from cdc_wastewater_analysis_ml_spark.operators.dedup import (
-        _bands_from_sig,
-        _verify_jaccard_exploded_hashed,
-        word_shingles,
-    )
+    """The engaged semi-join reduction (big-corpus leg) must be a pure
+    plan optimization: same pairs, same Jaccard values as the unreduced
+    packed verify and the pure-Python reference, for both sides and each
+    side alone.  Driven through the plan with a persisted, materialized
+    candidate relation, per its contract."""
     from cdc_wastewater_analysis_ml_spark.sources import fan_out
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     sh = fan_out(docs).select(
         F.col("doc_id"),
-        F.array_distinct(word_shingles("text", 3)).alias("__shs"),
+        F.array_distinct(D.word_shingles("text", 3)).alias("__shs"),
     ).persist()
     pairs = D.minhash_lsh_candidates(docs, "text", "doc_id").persist()
     pairs.count()
+
+    def run(ra, rb):
+        return _verified(
+            D._verify_jaccard_packed(
+                sh, pairs, "doc_id", 0.3, reduce_a=ra, reduce_b=rb
+            )
+        )
+
     try:
-        reduced = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in _verify_jaccard_exploded_hashed(
-                sh, pairs, "doc_id", 0.3, reduce_a=True, reduce_b=True
-            ).collect()
-        }
-        plain = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in _verify_jaccard_exploded_hashed(
-                sh, pairs, "doc_id", 0.3, reduce_a=False, reduce_b=False
-            ).collect()
-        }
-        assert reduced == plain and len(reduced) > 0
+        plain = run(False, False)
+        assert plain == _py_jaccard(
+            _shingle_sets(docs), _lsh_candidates(docs), 0.3
+        )
+        assert run(True, True) == plain and len(plain) > 0
         # r10 per-side flags: the asymmetric delta-driven shape
         # (dedup_incremental_near engages side A alone on saturated
         # stores) must be the same pure plan optimization.
-        a_only = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in _verify_jaccard_exploded_hashed(
-                sh, pairs, "doc_id", 0.3, reduce_a=True, reduce_b=False
-            ).collect()
-        }
-        assert a_only == plain
+        assert run(True, False) == plain
+        assert run(False, True) == plain
     finally:
         sh.unpersist()
         pairs.unpersist()
 
 
 def test_jaccard_verify_pairs_digest_matches_string_verify(spark, sf_small):
-    """r10 adoption: jaccard_verify_pairs now defaults to the digest-keyed
-    verify — pair set and every Jaccard value must stay bit-identical to
-    the byte-exact string-keyed plan (hash_verify_shingles=False)."""
+    """r10 adoption: jaccard_verify_pairs verifies over packed shingle
+    digests — pair set and every Jaccard value must stay bit-identical to
+    a string-keyed verify (the pure-Python reference), on the default
+    de-duplicating path and on the assume_distinct fast path."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-
-    def run(hashed):
+    ref = _py_jaccard(_shingle_sets(docs), _lsh_candidates(docs), 0.3)
+    for assume_distinct in (False, True):
         pairs = D.minhash_lsh_candidates(docs, "text", "doc_id")
-        return {
-            (r.id_a, r.id_b): r.jaccard
-            for r in D.jaccard_verify_pairs(
+        got = _verified(
+            D.jaccard_verify_pairs(
                 docs, pairs, "text", "doc_id", threshold=0.3,
-                assume_distinct=True, hash_verify_shingles=hashed,
-            ).collect()
-        }
-
-    digest_keyed, string_keyed = run(True), run(False)
-    assert digest_keyed == string_keyed and len(digest_keyed) > 0
+                assume_distinct=assume_distinct,
+            )
+        )
+        assert got == ref and len(got) > 0, assume_distinct
 
 
 def test_estimated_bytes_connect_fallback():
@@ -1026,23 +997,23 @@ def test_vs_store_hot_bucket_guard(spark):
 def test_adaptive_verify_gates_on_distinct_ids_per_side(spark, monkeypatch):
     """Pin the r10 gate DECISION, not just result equivalence (which holds
     for any flag combination, so the equivalence tests above cannot catch
-    a gate regression): _adaptive_hashed_verify must gate each side on its
-    DISTINCT candidate-id count.  The asymmetric delta-vs-store shape is
-    the case the old pair-COUNT proxy got wrong — one delta doc matching
-    60 of 100 store docs has 60 pairs (proxy: 2*60 > 0.5*100 -> both
-    sides off) but a 1-element id_a set, so side A must engage while the
-    unselective side B (60 ids > half the docs) stays off."""
+    a gate regression): the big-corpus leg of _verify_jaccard must gate
+    each side on its DISTINCT candidate-id count.  The asymmetric
+    delta-vs-store shape is the case the old pair-COUNT proxy got wrong —
+    one delta doc matching 60 of 100 store docs has 60 pairs (proxy:
+    2*60 > 0.5*100 -> both sides off) but a 1-element id_a set, so side A
+    must engage while the unselective side B (60 ids > half the docs)
+    stays off."""
     captured = {}
-    real = D._HASHED_VERIFY_IMPL
+    real = D._verify_jaccard_packed
 
     def spy(sh, pairs, id_col, threshold, *, reduce_a, reduce_b):
         captured["flags"] = (reduce_a, reduce_b)
         return real(sh, pairs, id_col, threshold,
                     reduce_a=reduce_a, reduce_b=reduce_b)
 
-    # The gate dispatches through the r11 A/B seam — spy the seam, so the
-    # pin holds regardless of which verify implementation is adopted.
-    monkeypatch.setattr(D, "_HASHED_VERIFY_IMPL", spy)
+    monkeypatch.setattr(D, "_verify_jaccard_packed", spy)
+    monkeypatch.setattr(D, "_SEMIJOIN_MIN_INPUT_BYTES", 0)
     sh = spark.createDataFrame(
         [(i, [f"s{i}", "common"]) for i in range(100)],
         "doc_id long, __shs array<string>",
@@ -1050,8 +1021,13 @@ def test_adaptive_verify_gates_on_distinct_ids_per_side(spark, monkeypatch):
 
     def gates(pair_rows):
         pairs = spark.createDataFrame(pair_rows, "id_a long, id_b long")
-        out, pairs_p = D._adaptive_hashed_verify(sh, pairs, "doc_id", 0.1, 100)
-        pairs_p.unpersist()
+        # spark.range carries a real size estimate (the local list frames
+        # are stat-less, which the dispatch treats as small).
+        out, pins = D._verify_jaccard(
+            sh, pairs, "doc_id", 0.1, (spark.range(100),), n_docs=100
+        )
+        assert len(pins) == 1  # the big leg's private pair cache
+        pins[0].unpersist()
         return captured.pop("flags")
 
     # Asymmetric: 1 distinct id_a, 60 distinct id_b over 100 docs.
@@ -1060,6 +1036,78 @@ def test_adaptive_verify_gates_on_distinct_ids_per_side(spark, monkeypatch):
     assert gates([(a, a + 1) for a in range(0, 20, 2)]) == (True, True)
     # Saturated symmetric: 60 ids per side (> half the docs) -> both off.
     assert gates([(a, a + 1) for a in range(1, 61)]) == (False, False)
+
+
+def test_big_corpus_leg_matches_small_leg_per_consumer(
+    spark, sf_small, monkeypatch
+):
+    """Every verify consumer end to end on BOTH legs of the one dispatch:
+    with the size gate forced to 0 the fixture takes the big-corpus leg
+    (shingle-cache count, candidate barrier, gated reductions or the
+    pre-partitioned oriented plan), and each consumer must return exactly
+    what its small leg returns and what the pure-Python reference says."""
+    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
+    store = docs.filter(F.col("doc_id") % 2 == 0)
+    delta = docs.filter(F.col("doc_id") % 2 == 1).select(
+        (F.col("doc_id") + 10**9).alias("doc_id"), "text"
+    )
+    sets = _shingle_sets(docs)
+    sets.update(_shingle_sets(delta))
+    ref = _py_jaccard(sets, _lsh_candidates(docs), 0.3)
+    vs_store = [
+        (r.id_new, r.id_store)
+        for r in D.minhash_lsh_candidates_vs_store(
+            delta, store, "text", "doc_id"
+        ).collect()
+    ]
+    matched = {a for a, _ in _py_jaccard(sets, vs_store, 0.3)}
+    delta_ids = {r.doc_id for r in delta.select("doc_id").collect()}
+    assert ref and matched  # non-vacuous on this fixture
+
+    def consumers():
+        yield "minhash_lsh_verified", _verified(
+            D.minhash_lsh_verified(docs, "text", "doc_id", threshold=0.3)
+        )
+        for with_sizes in (True, False):
+            pairs = D.minhash_lsh_candidates(
+                docs, "text", "doc_id", with_sizes=with_sizes
+            )
+            yield f"jaccard_verify_pairs sized={with_sizes}", _verified(
+                D.jaccard_verify_pairs(
+                    docs, pairs, "text", "doc_id", threshold=0.3,
+                    assume_distinct=True,
+                )
+            )
+        yield "dedup_incremental_near", {
+            r.doc_id
+            for r in D.dedup_incremental_near(
+                delta, store, "text", "doc_id", threshold=0.3
+            ).select("doc_id").collect()
+        }
+
+    expected = {
+        "minhash_lsh_verified": ref,
+        "jaccard_verify_pairs sized=True": ref,
+        "jaccard_verify_pairs sized=False": ref,
+        "dedup_incremental_near": delta_ids - matched,
+    }
+    legs = []
+    real = D._verify_jaccard
+
+    def spy(*args, **kwargs):
+        out, pins = real(*args, **kwargs)
+        legs.append(bool(pins))
+        return out, pins
+
+    monkeypatch.setattr(D, "_verify_jaccard", spy)
+    small = dict(consumers())
+    assert legs == [False] * 4
+    monkeypatch.setattr(D, "_SEMIJOIN_MIN_INPUT_BYTES", 0)
+    big = dict(consumers())
+    assert legs[4:] == [True] * 4
+    for name, want in expected.items():
+        assert small[name] == want, name
+        assert big[name] == want, name
 
 
 def test_sized_verify_shingle_n_contract(spark, sf_small):

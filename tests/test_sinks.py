@@ -128,3 +128,30 @@ def test_schema_memo_invalidates_on_inplace_part_rewrite(spark, tmp_path):
     back = scan_parquet(spark, out)
     assert sorted(f.name for f in back.schema) == ["tag", "v"]
     assert back.count() == 3
+
+
+def test_schema_memo_skips_hive_partitioned_dirs(spark, tmp_path):
+    """ADVICE r15 #1: for a hive-partitioned directory (``t/p=1/part-*``)
+    an in-place rewrite of a NESTED part file changes neither the root
+    directory's stat nor any top-level leaf, so a memo keyed on those
+    served the stale schema.  scan_parquet must read what
+    spark.read.parquet reads after the rewrite."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part_dir = tmp_path / "t" / "p=1"
+    part_dir.mkdir(parents=True)
+    part = str(part_dir / "part-0.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    root = str(tmp_path / "t")
+    assert sorted(f.name for f in scan_parquet(spark, root).schema) == ["a", "p"]
+
+    root_stat = os.stat(root)
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), part)
+    os.utime(root, ns=(root_stat.st_atime_ns, root_stat.st_mtime_ns))
+
+    want = sorted(f.name for f in spark.read.parquet(root).schema)
+    assert want == ["a", "b", "p"]
+    assert sorted(f.name for f in scan_parquet(spark, root).schema) == want

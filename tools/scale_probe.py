@@ -136,8 +136,8 @@ if SMALL_LABEL != "sf0.1" and not OUT_NAME:
 
 def build_session(app_name: str = "scale_probe", port: int = 4049) -> SparkSession:
     """Probe session: local[32], UI enabled for the REST stage counters.
-    Shared with tools/verify_ab.py (r11 review — the two tools previously
-    carried diverging copies)."""
+    Shared by the probe tools (pairs_probe, contamination_probe,
+    broadcast_audit, stage_profile) so they measure one session shape."""
     b = (
         SparkSession.builder.appName(app_name)
         .master("local[32]")
