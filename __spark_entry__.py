@@ -147,6 +147,14 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # as before).  Changed functions: minhash_signatures, _bands_from_sig,
     # the packed plans, the dispatch, minhash_lsh_verified,
     # ngram_jaccard_pairs, jaccard_verify_pairs, dedup_incremental_near.
+    # Later in r16: the three verify consumers check ``threshold`` before
+    # persisting anything (error path only); every id/vector column
+    # reference goes through text.name_col (the same resolved attribute for
+    # plain names — plans unchanged); connected_components reads its
+    # observed label sum with a bounded wait and falls back to an explicit
+    # sum job (same value).  Changed functions add simhash,
+    # simhash_band_candidates, substring_kgram_pairs, the embedding pair
+    # generators and connected_components.
     "operators/dedup.py": 16,
     "operators/caching.py": 5,
     # r6: chunk_documents rejects stride > chunk_tokens (ADVICE r5 #1 —
@@ -307,6 +315,10 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # r16 (ADVICE r15 #2/#5): rhp_sign/rhp_signature render the column
     # name through quote_ident (identical SQL for plain names); rhp_sign's
     # hint widens to Column | str.  Consumers = queries routing them.
+    # Later in r16: every id/vector column reference goes through
+    # text.name_col (the same resolved attribute for plain names — plans
+    # unchanged).  Changed functions add cosine_topk_bruteforce,
+    # cosine_topk_lsh, cosine_topk_ivf, fit_ivf_centroids, lsh_multi_scored.
     "operators/similarity.py": 16,
     # r15 opt round: tokenize becomes the single-regex form
     # split(trim(lower(x)), '\s+') — value-identical to splitting the
@@ -322,7 +334,8 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # r16 (ADVICE r15 #2): tokenize/word_shingles render the column name
     # through the new quote_ident helper (backticks escaped) — identical
     # SQL for plain names, so plans are unchanged; module rule again, no
-    # overlay, full route set.
+    # overlay, full route set.  Later in r16: the additive name_col helper
+    # (quoted column reference), same rule.
     "operators/text.py": 16,
     # r7: RUNTIME_CONFS gained canChangeCachedPlanOutputPartitioning=true —
     # a PHYSICAL-layout conf (AQE may coalesce cached-plan output
@@ -357,7 +370,12 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # the first assertion, and a memo miss (new wrapper object) just
     # re-applies — results unaffected by construction; consumer set stays
     # empty, same basis as the r7/r10/r14 entries.
-    "session.py": 15,
+    # r16: a local session this module launches starts its driver JVM from
+    # a cached class-data archive (JVM flags and an empty SPARK_CONF_DIR
+    # for the launch only; the default conf dir it replaces holds only
+    # *.template files Spark never reads).  No conf value a query sees
+    # changes — consumer set stays empty, same basis as above.
+    "session.py": 16,
     # r7: docstring-only (Pillow injection recipe, VERDICT r6 task 8) — no
     # executable change, consumer set empty.
     "operators/multimodal.py": 7,
@@ -560,8 +578,10 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # rendering in minhash_signatures/_bands_from_sig — call-path consumers
     # = every query routing the minhash family, the n-gram verify or the
     # incremental near-dup operator (derived from registry call sites).
-    # connected_components, simhash, substring_kgram_pairs and the
-    # embedding pair generators are byte-untouched and keep their rows.
+    # Later in r16 (see the module entry): the name_col references and
+    # the bounded CC metric wait add the simhash, substring k-gram and
+    # embedding-pair queries (call paths derived from registry call sites,
+    # attribute calls included).
     ("operators/dedup.py", 16): (
         "analytic_edit_distance",
         "dedup_cluster_cc",
@@ -576,6 +596,11 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
         "dedup_lsh_bucket_stats",
         "dedup_incremental_near",
         "stream_dedup_incremental_near",
+        "dedup_simhash",
+        "dedup_substring_kgram",
+        "dedup_embedding_cosine",
+        "dedup_embedding_cosine_lsh",
+        "dedup_embedding_clusters",
     ),
     ("operators/windows.py", 4): (
         "window_lag",
@@ -740,7 +765,7 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     ),
     ("streaming/ingest.py", 10): ("stream_incremental_ingest",),
     ("streaming/lines.py", 9): ("stream_line_dedup",),
-    ("session.py", 15): (),
+    ("session.py", 16): (),
     # r14: engineer_features' batched scalar pass — consumers = the two
     # queries routing it (the ml_* metric queries use their own builders).
     ("plans/features.py", 14): (
@@ -770,13 +795,19 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # r15: rhp_sign/rhp_signature only — consumers = every query routing
     # rhp_signature (incl. the embedding-cluster CC pair generator; the
     # multi-table queries route rhp_signature_arrow, byte-untouched).
-    # r16: rhp_sign/rhp_signature identifier quoting — same consumer set.
+    # r16: rhp_sign/rhp_signature identifier quoting — same consumer set;
+    # later in r16 the name_col references add the brute-force, IVF and
+    # multi-probe LSH queries.
     ("operators/similarity.py", 16): (
         "sim_cosine_lsh",
         "dedup_embedding_cosine_lsh",
         "dedup_embedding_clusters",
         "sim_recall_at_k",
         "sim_recall_cost_sweep",
+        "sim_cosine_topk",
+        "sim_cosine_ivf",
+        "sim_cosine_ivf_kmeans",
+        "sim_cosine_lsh_multi",
     ),
     # r15: tokenize single-regex — no overlay (full route set; see the
     # module entry).  The old r4 empty overlay (dead-expression removal)

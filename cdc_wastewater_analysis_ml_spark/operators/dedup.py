@@ -21,6 +21,8 @@ expressions (explode/groupBy/joins) — no Python UDFs.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -30,7 +32,7 @@ from .caching import (
     scoped_persist,
     transfer_cache_scope,
 )
-from .text import fingerprint, quote_ident, token_count, word_shingles
+from .text import fingerprint, name_col, quote_ident, token_count, word_shingles
 
 
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -67,7 +69,7 @@ def minhash_signatures(
     # minhash expression would re-tokenize and re-slice k times per row
     # (measured 8× slower at 5k docs).
     with_shingles = fan_out(df).select(
-        F.col(id_col), word_shingles(text_col, shingle_n).alias("__shingles")
+        name_col(id_col), word_shingles(text_col, shingle_n).alias("__shingles")
     )
 
     # r15 (opt): the k seeded-min columns are rendered as SQL and parsed in
@@ -295,7 +297,7 @@ def _packed_digest_relation(sh: DataFrame, id_col: str) -> DataFrame:
     length (the distinct shingle-set size), where the null element counts
     toward __n but can never intersect."""
     return sh.select(
-        F.col(id_col),
+        name_col(id_col),
         F.transform(
             F.filter(F.col("__shs"), lambda s: s.isNotNull()),
             lambda s: F.xxhash64(s),
@@ -332,7 +334,7 @@ def _verify_jaccard_packed(
     broadcast cap (RUNTIME_CONFS, sized for worst-case dictionary
     expansion).
 
-    ``threshold`` must be > 0 (:func:`_verify_jaccard` validates): a pair
+    ``threshold`` must be > 0 (:func:`_check_verify_threshold`): a pair
     with an empty intersection survives the inner joins with jaccard 0 and
     only the threshold filter drops it.
 
@@ -350,12 +352,12 @@ def _verify_jaccard_packed(
     """
     hs = _packed_digest_relation(sh, id_col)
     a = hs.select(
-        F.col(id_col).alias("id_a"),
+        name_col(id_col).alias("id_a"),
         F.col("__hs").alias("__ha"),
         F.col("__n").alias("__na"),
     )
     b = hs.select(
-        F.col(id_col).alias("id_b"),
+        name_col(id_col).alias("id_b"),
         F.col("__hs").alias("__hb"),
         F.col("__n").alias("__nb"),
     )
@@ -442,7 +444,7 @@ def _verify_jaccard_packed_oriented(
         n_part = int(
             sh.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        pinned = hs.repartition(n_part, F.col(id_col)).persist()
+        pinned = hs.repartition(n_part, name_col(id_col)).persist()
         hs = pinned
     a_small = F.col("__na") <= F.col("__nb")
     op = sized_pairs.select(
@@ -452,12 +454,12 @@ def _verify_jaccard_packed_oriented(
         F.when(a_small, F.col("id_b")).otherwise(F.col("id_a")).alias("__k_big"),
     )
     small = hs.select(
-        F.col(id_col).alias("__k_small"),
+        name_col(id_col).alias("__k_small"),
         F.col("__hs").alias("__h_small"),
         F.col("__n").alias("__n_small"),
     )
     big = hs.select(
-        F.col(id_col).alias("__k_big"),
+        name_col(id_col).alias("__k_big"),
         F.col("__hs").alias("__h_big"),
         F.col("__n").alias("__n_big"),
     )
@@ -473,6 +475,17 @@ def _verify_jaccard_packed_oriented(
         F.col("jaccard") >= threshold
     )
     return scoped_persist(out, pinned) if pinned is not None else out
+
+
+def _check_verify_threshold(threshold: float) -> None:
+    """Each :func:`_verify_jaccard` consumer calls this FIRST, before it
+    persists any shingle, banded or candidate relation: a later failure
+    would leave those caches pinned for the session."""
+    if threshold <= 0:
+        raise ValueError(
+            "threshold must be > 0 (zero-intersection pairs survive the "
+            "packed joins with jaccard 0 and must be filtered)"
+        )
 
 
 def _verify_jaccard(
@@ -527,13 +540,6 @@ def _verify_jaccard(
     (exp 1.089, ov1→ov100).  Candidate growth is a data property managed
     upstream (exact-dedup first, ``max_bucket_size``), not by this plan.
     """
-    if threshold <= 0:
-        # Validated before the big leg's eager barrier (r10 review): a
-        # later failure would orphan the private pair cache.
-        raise ValueError(
-            "threshold must be > 0 (zero-intersection pairs survive the "
-            "packed joins with jaccard 0 and must be filtered)"
-        )
     ests = [_estimated_bytes(d) for d in inputs]
     if min(ests) < 0 or sum(ests) < _SEMIJOIN_MIN_INPUT_BYTES:
         if sized:
@@ -616,12 +622,13 @@ def minhash_lsh_verified(
     without the pin each side would re-run the 8 md5 transforms over the
     cached shingles.  All pins release when the caller drops the result.
     """
+    _check_verify_threshold(threshold)
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     sh = (
         fan_out(df)
         .select(
-            F.col(id_col),
+            name_col(id_col),
             F.array_distinct(word_shingles(text_col, shingle_n)).alias("__shs"),
         )
         .persist()
@@ -652,12 +659,12 @@ def minhash_lsh_verified(
             on=[
                 F.col("a.band_id") == F.col("b.band_id"),
                 F.col("a.band_key") == F.col("b.band_key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+                name_col(id_col, "a") < name_col(id_col, "b"),
             ],
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            name_col(id_col, "a").alias("id_a"),
+            name_col(id_col, "b").alias("id_b"),
             F.col("a.__n").alias("__na"),
             F.col("b.__n").alias("__nb"),
         )
@@ -713,8 +720,8 @@ def minhash_lsh_candidates(
     a = guarded.alias("a")
     b = guarded.alias("b")
     pair_cols = [
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
+        name_col(id_col, "a").alias("id_a"),
+        name_col(id_col, "b").alias("id_b"),
     ]
     if with_sizes:
         # Stamp the shingle width into the annotation columns' metadata so
@@ -732,7 +739,7 @@ def minhash_lsh_candidates(
             on=[
                 F.col("a.band_id") == F.col("b.band_id"),
                 F.col("a.band_key") == F.col("b.band_key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+                name_col(id_col, "a") < name_col(id_col, "b"),
             ],
         )
         .select(*pair_cols)
@@ -757,7 +764,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     # hash array — the naive form (md5 inside every bit's aggregate) costs
     # bits× more hashing (measured ~8s → ~1s at 5k docs).
     hashed = fan_out(df).select(
-        F.col(id_col),
+        name_col(id_col),
         F.transform(tokenize(text_col), lambda t: F.md5(t)).alias("__tok_md5"),
     )
 
@@ -771,7 +778,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     sig = F.expr(
         "concat(" + ",".join(_simhash_vote_sql(j) for j in range(bits)) + ")"
     )
-    return hashed.select(F.col(id_col), sig.alias("simhash"))
+    return hashed.select(name_col(id_col), sig.alias("simhash"))
 
 
 def _simhash_vote_sql(j: int) -> str:
@@ -808,7 +815,7 @@ def simhash_band_candidates(
         for b in range(bands)
     ]
     banded = sh.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("band")
+        name_col(id_col), F.explode(F.array(*band_structs)).alias("band")
     ).select(id_col, "band.band_id", "band.band_key").persist()
     guarded = _bucket_guard(
         banded, id_col, max_bucket_size, hot_bucket_action, "simhash_band_candidates"
@@ -820,10 +827,12 @@ def simhash_band_candidates(
             on=[
                 F.col("a.band_id") == F.col("b.band_id"),
                 F.col("a.band_key") == F.col("b.band_key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+                name_col(id_col, "a") < name_col(id_col, "b"),
             ],
         )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .select(
+            name_col(id_col, "a").alias("id_a"), name_col(id_col, "b").alias("id_b")
+        )
         .distinct()
     )
     return scoped_persist(out, banded)
@@ -859,7 +868,7 @@ def ngram_jaccard_pairs(
     # (see corpus.contamination_overlap); null-text rows yield a null sh
     # that no equi-join side ever matches.
     sh = fan_out(df).select(
-        F.col(id_col),
+        name_col(id_col),
         F.explode_outer(
             F.array_distinct(word_shingles(text_col, shingle_n))
         ).alias("sh"),
@@ -869,7 +878,7 @@ def ngram_jaccard_pairs(
     # placeholder row onto one shared join key — a spurious hot bucket
     # joining all null docs pairwise.  The when() keeps null never matching.
     sh = sh.select(
-        F.col(id_col),
+        name_col(id_col),
         F.when(F.col("sh").isNotNull(), F.xxhash64(F.col("sh"))).alias("sh"),
     )
     sh = sh.persist()
@@ -880,16 +889,16 @@ def ngram_jaccard_pairs(
             b,
             on=[
                 F.col("a.sh") == F.col("b.sh"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+                name_col(id_col, "a") < name_col(id_col, "b"),
             ],
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            name_col(id_col, "a").alias("id_a"), name_col(id_col, "b").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    sa = sizes.select(name_col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(name_col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     out = (
         inter.join(F.broadcast(sa), "id_a")
         .join(F.broadcast(sb), "id_b")
@@ -919,8 +928,8 @@ def near_dup_embedding_pairs(
     from .similarity import cosine
 
     df = fan_out(df)
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
+    a = df.select(name_col(id_col).alias("id_a"), name_col(vec_col).alias("vec_a"))
+    b = df.select(name_col(id_col).alias("id_b"), name_col(vec_col).alias("vec_b"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cos", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6))
@@ -946,10 +955,10 @@ def near_dup_embedding_lsh(
 
     sig = rhp_signature(fan_out(df), id_col, vec_col, planes, dims)
     a = sig.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), "rhp_sig"
+        name_col(id_col).alias("id_a"), name_col(vec_col).alias("vec_a"), "rhp_sig"
     )
     b = sig.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"), "rhp_sig"
+        name_col(id_col).alias("id_b"), name_col(vec_col).alias("vec_b"), "rhp_sig"
     )
     return (
         a.join(b, on="rhp_sig")
@@ -1009,6 +1018,7 @@ def jaccard_verify_pairs(
     annotations would survive the pair-distinct as duplicate rows and
     mis-prefilter.  Pass generator-produced sizes or none.
     """
+    _check_verify_threshold(threshold)
     sized = {"__na", "__nb"} <= set(pairs.columns)
     if sized:
         # ADVICE r12: the sized path used to trust caller-supplied sizes on
@@ -1065,7 +1075,7 @@ def jaccard_verify_pairs(
     # re-runs per consumer.  Scoped to the returned plan like the
     # transferred candidate-cache pins.
     sh = fan_out(df).select(
-        F.col(id_col),
+        name_col(id_col),
         F.array_distinct(word_shingles(text_col, shingle_n)).alias("__shs"),
     ).persist()
     out, pins = _verify_jaccard(sh, pairs, id_col, threshold, (df,), sized=sized)
@@ -1164,8 +1174,8 @@ def minhash_lsh_candidates_vs_store(
             ],
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_new"),
-            F.col(f"b.{id_col}").alias("id_store"),
+            name_col(id_col, "a").alias("id_new"),
+            name_col(id_col, "b").alias("id_store"),
         )
         .distinct()
     )
@@ -1209,6 +1219,7 @@ def dedup_incremental_near(
     run :func:`minhash_lsh_candidates` + verify within the batch first if
     the delta itself may contain them.
     """
+    _check_verify_threshold(threshold)
     if check_disjoint_ids:
         colliding = (
             new_df.select(id_col)
@@ -1242,7 +1253,7 @@ def dedup_incremental_near(
         fan_out(new_df.select(id_col, text_col))
         .unionByName(fan_out(store_df.select(id_col, text_col)))
         .select(
-            F.col(id_col),
+            name_col(id_col),
             F.array_distinct(word_shingles(text_col, shingle_n)).alias("__shs"),
         )
         .persist()
@@ -1293,6 +1304,25 @@ def dedup_incremental_near(
     return scoped_persist(transfer_cache_scope(cand, out), sh, *pins, matched)
 
 
+#: Bound on the wait for a CC round's observed label sum.  The metrics
+#: normally arrive with the job that computed them; the bound only turns a
+#: lost listener event into a fallback instead of a hang.
+_OBSERVED_WAIT_S = 10.0
+
+
+def _observed_value(obs, key: str, timeout_s: float) -> tuple[bool, object]:
+    """``(True, obs.get[key])`` once the observed metrics have arrived,
+    ``(False, None)`` if they have not within ``timeout_s`` — where
+    ``Observation.get`` would block forever."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        # Waits up to 100 ms in the JVM for the metrics future.
+        if obs._jo.getRowOrEmpty().isDefined():
+            return True, obs.get[key]
+        if time.monotonic() >= deadline:
+            return False, None
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -1330,7 +1360,9 @@ def connected_components(
       ever decrease, so the label sum is strictly monotone and "sum
       unchanged" ⇔ fixpoint.  The sum rides each round's checkpoint job as
       an ``observe()`` metric (r15) — zero extra jobs per round;
-      decimal(38,0) so a 100 TB corpus's id sum cannot overflow.
+      decimal(38,0) so a 100 TB corpus's id sum cannot overflow.  The
+      metric is read with a bounded wait (:func:`_observed_value`); if it
+      never arrives, one explicit sum job replaces it.
 
     Raises ``RuntimeError`` if ``max_iter`` rounds don't converge — an
     unconverged labelling silently under-merges clusters, which is a
@@ -1388,12 +1420,18 @@ def connected_components(
     # count is the §2.6 barrier cut, not a local-mode twiddle.
     from pyspark.sql import Observation
 
+    def _label_sum() -> Column:
+        return F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+
     def _ckpt_with_sum(df: DataFrame, tag: str):
         obs = Observation(f"cc_label_sum_{tag}")
-        ck = df.observe(
-            obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).localCheckpoint(eager=True)
-        return ck, obs.get["s"]
+        ck = df.observe(obs, _label_sum()).localCheckpoint(eager=True)
+        arrived, s = _observed_value(obs, "s", _OBSERVED_WAIT_S)
+        if not arrived:
+            # One extra job over the checkpointed labels: the pre-observe
+            # form of the same sum.
+            s = ck.agg(_label_sum()).collect()[0]["s"]
+        return ck, s
 
     labels, prev_sum = _ckpt_with_sum(
         sym.groupBy("src")
@@ -1531,7 +1569,7 @@ def substring_kgram_pairs(
         fan_out(df)
         .filter(token_count(text_col) >= k)
         .select(
-            F.col(id_col),
+            name_col(id_col),
             F.explode_outer(
                 F.array_distinct(word_shingles(text_col, k))
             ).alias("__sh"),
@@ -1576,7 +1614,7 @@ def substring_kgram_pairs(
         grouped = (
             spans.join(hot, "__h", "left_anti")
             .groupBy("__h")
-            .agg(F.collect_list(F.col(id_col)).alias("__ids"))
+            .agg(F.collect_list(name_col(id_col)).alias("__ids"))
             .filter(F.size("__ids") >= 2)
         )
         out = (
@@ -1593,12 +1631,12 @@ def substring_kgram_pairs(
             b,
             on=[
                 F.col("a.__h") == F.col("b.__h"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+                name_col(id_col, "a") < name_col(id_col, "b"),
             ],
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            name_col(id_col, "a").alias("id_a"),
+            name_col(id_col, "b").alias("id_b"),
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_spans"))
     )

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.readers import fan_out
-from .text import quote_ident
+from .text import name_col, quote_ident
 
 
 def _cos_scorer_udf():
@@ -86,10 +86,10 @@ def cosine_topk_bruteforce(
     reduced by rank ≤ k.  Self-matches excluded; ties broken by neighbor id.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        name_col(id_col).alias("query_id"), name_col(vec_col).alias("q_vec")
     )
     c = fan_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        name_col(id_col).alias("neighbor_id"), name_col(vec_col).alias("c_vec")
     )
     scorer = _cos_scorer_udf()
     scored = (
@@ -184,7 +184,7 @@ def rhp_signature(
         )
         + ")"
     )
-    return df.select(F.col(id_col), F.col(vec_col), sig.alias("rhp_sig"))
+    return df.select(name_col(id_col), name_col(vec_col), sig.alias("rhp_sig"))
 
 
 def cosine_topk_lsh(
@@ -204,13 +204,13 @@ def cosine_topk_lsh(
     = bigger buckets = higher recall, more compute).
     """
     q = rhp_signature(queries, id_col, vec_col, planes, dims).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+        name_col(id_col).alias("query_id"),
+        name_col(vec_col).alias("q_vec"),
         F.col("rhp_sig"),
     )
     c = rhp_signature(fan_out(corpus), id_col, vec_col, planes, dims).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        name_col(id_col).alias("neighbor_id"),
+        name_col(vec_col).alias("c_vec"),
         F.col("rhp_sig"),
     )
     scorer = _cos_scorer_udf()
@@ -352,14 +352,16 @@ def cosine_topk_ivf(
     """
     c = assign_ivf_cells(
         fan_out(corpus).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            name_col(id_col).alias("neighbor_id"), name_col(vec_col).alias("c_vec")
         ),
         centroids,
         "c_vec",
         "cell",
     )
     probes = probe_ivf_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        queries.select(
+            name_col(id_col).alias("query_id"), name_col(vec_col).alias("q_vec")
+        ),
         centroids,
         "q_vec",
         "cell",
@@ -445,7 +447,7 @@ def fit_ivf_centroids(
     from pyspark.ml.functions import array_to_vector
 
     vecs = df.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        array_to_vector(name_col(vec_col).cast("array<double>")).alias("features")
     )
     model = KMeans(k=nlist, seed=seed, initMode="k-means||").fit(vecs)
     return [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
@@ -569,7 +571,7 @@ def lsh_multi_scored(
     sig_len = bands * band_bits
     c_sig = rhp_signature_arrow(
         fan_out(corpus).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+            name_col(id_col).alias("neighbor_id"), name_col(vec_col).alias("c_vec")
         ),
         "c_vec",
         sig_len,
@@ -583,7 +585,7 @@ def lsh_multi_scored(
     )
     q_sig = rhp_signature_arrow(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            name_col(id_col).alias("query_id"), name_col(vec_col).alias("q_vec")
         ),
         "q_vec",
         sig_len,
@@ -615,16 +617,16 @@ def lsh_multi_scored(
     return (
         cand.join(
             corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("c_vec"),
+                name_col(id_col).alias("neighbor_id"),
+                name_col(vec_col).alias("c_vec"),
             ),
             "neighbor_id",
         )
         .join(
             F.broadcast(
                 queries.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("q_vec"),
+                    name_col(id_col).alias("query_id"),
+                    name_col(vec_col).alias("q_vec"),
                 )
             ),
             "query_id",

@@ -31,6 +31,15 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def name_col(name: str, qualifier: str = "") -> Column:
+    """The column NAMED ``name`` (optionally of relation alias
+    ``qualifier``).  Bare ``F.col`` parses its argument, so a name holding
+    a backtick fails and one holding a dot reads as a struct field; the
+    quoted form resolves to exactly the same attribute for a plain name."""
+    ident = quote_ident(name)
+    return F.col(f"{qualifier}.{ident}" if qualifier else ident)
+
+
 def tokenize(c: Column | str) -> Column:
     """Whitespace tokenization → array<string> (empty-safe).
 

@@ -65,6 +65,16 @@ def split_train_test_stratified(
     identical duplicate rows are interchangeable), so membership is
     deterministic per seed.  Checkpoint tradeoff as in ``binary_curve``:
     blocks are not replicated — executor loss fails (re-runs) the job.
+
+    The partition LAYOUT is not deterministic per seed: Spark seeds the
+    ``RangePartitioner`` boundary sample from the RDD id, which grows with
+    session history, and MLlib's tree ``findSplits`` samples its input per
+    partition above ``max(maxBins², 10000)`` rows.  So any RDD created
+    before this split moves the GBT metrics: one extra
+    ``sc.parallelize([1]).map(f).count()`` at the top of the CLI's
+    ``main`` moved all six GBT metrics on the 50k-row fixture 43 (GBT
+    (Original) ROC-AUC 0.710568 → 0.709677), while both LinearRegression
+    scenarios stayed identical.
     """
     salted = df.withColumn(
         "__h", F.xxhash64(F.concat_ws("§", *[F.col(c).cast("string") for c in df.columns]), F.lit(seed))

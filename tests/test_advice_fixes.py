@@ -318,7 +318,7 @@ def test_backtick_column_names_through_sql_rendered_ops(spark, sf_small):
     renamed = docs.withColumnRenamed("text", odd)
 
     def rows(df, *cols):
-        return sorted(map(tuple, df.select(*cols).collect()))
+        return sorted(map(tuple, df.select(*map(T.name_col, cols)).collect()))
 
     pair_cols = ("id_a", "id_b", "jaccard")
     assert rows(D.minhash_lsh_verified(renamed, odd, "doc_id"), *pair_cols) == rows(
@@ -341,3 +341,86 @@ def test_backtick_column_names_through_sql_rendered_ops(spark, sf_small):
         emb.select("vec_id", SIM.rhp_sign("embedding", 0, dims).alias("s")),
         "vec_id", "s",
     )
+    # The id and vector columns are selected by name, never parsed: the
+    # signature keeps the odd vector column, and an odd id column survives
+    # the LSH self-join's qualified references.
+    assert rows(
+        SIM.rhp_signature(odd_emb, "vec_id", odd, dims=dims), "vec_id", odd, "rhp_sig"
+    ) == rows(
+        SIM.rhp_signature(emb, "vec_id", "embedding", dims=dims),
+        "vec_id", "embedding", "rhp_sig",
+    )
+    odd_ids = docs.withColumnRenamed("doc_id", odd)
+    assert rows(D.minhash_lsh_verified(odd_ids, "text", odd), *pair_cols) == rows(
+        D.minhash_lsh_verified(docs, "text", "doc_id"), *pair_cols
+    )
+    # A plain name gives the very same plan as before.
+    def logical(col):
+        return docs.alias("a").select(col)._jdf.queryExecution().logical().toString()
+
+    assert logical(T.name_col("doc_id")) == logical(F.col("doc_id"))
+    assert logical(T.name_col("doc_id", "a")) == logical(F.col("a.doc_id"))
+
+
+@pytest.mark.parametrize("consumer", ["minhash_lsh_verified", "jaccard_verify_pairs",
+                                      "dedup_incremental_near"])
+def test_verify_threshold_checked_before_any_cache(spark, sf_small, consumer):
+    """A threshold <= 0 used to be rejected inside the shared verify
+    dispatch, after the consumer had persisted its shingle (and banded /
+    candidate) relations — which then stayed pinned for the session."""
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    cache_mgr.clearCache()
+    docs = load_table(spark, sf_small, "documents").select("doc_id", "text").limit(200)
+    calls = {
+        "minhash_lsh_verified": lambda: D.minhash_lsh_verified(
+            docs, "text", "doc_id", threshold=0
+        ),
+        "jaccard_verify_pairs": lambda: D.jaccard_verify_pairs(
+            docs, spark.createDataFrame([(1, 2)], "id_a long, id_b long"),
+            "text", "doc_id", threshold=0,
+        ),
+        "dedup_incremental_near": lambda: D.dedup_incremental_near(
+            docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1"),
+            "text", "doc_id", threshold=0,
+        ),
+    }
+    with pytest.raises(ValueError, match="threshold must be > 0"):
+        calls[consumer]()
+    gc.collect()
+    assert cache_mgr.isEmpty()
+
+
+def test_observed_value_wait_is_bounded(spark):
+    """An Observation whose metrics never arrive (here: its DataFrame never
+    runs) makes ``Observation.get`` block forever; the CC reader gives up
+    after its bound."""
+    import time
+
+    from pyspark.sql import Observation
+
+    obs = Observation("never_runs")
+    spark.range(5).observe(obs, F.count(F.lit(1)).alias("n"))
+    t0 = time.monotonic()
+    assert D._observed_value(obs, "n", 0.3) == (False, None)
+    assert time.monotonic() - t0 < 5
+    ran = Observation("runs")
+    spark.range(5).observe(ran, F.count(F.lit(1)).alias("n")).collect()
+    assert D._observed_value(ran, "n", 5.0) == (True, 5)
+
+
+def test_cc_labels_identical_when_observed_sums_never_arrive(spark, monkeypatch):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(20, 30)] + [(5, 3), (3, 7), (9, 8)],
+        ["id_a", "id_b"],
+    )
+
+    def labels():
+        return sorted(map(tuple, D.connected_components(edges).collect()))
+
+    observed = labels()
+    empty = []
+    monkeypatch.setattr(
+        D, "_observed_value", lambda *a: empty.append(a) or (False, None)
+    )
+    assert labels() == observed
+    assert empty  # every round took the fallback sum
