@@ -40,7 +40,7 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return (
         df.withColumn("fp", fingerprint(text_col))
         .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min(name_col(id_col)).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
@@ -816,7 +816,7 @@ def simhash_band_candidates(
     ]
     banded = sh.select(
         name_col(id_col), F.explode(F.array(*band_structs)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_key").persist()
+    ).select(name_col(id_col), "band.band_id", "band.band_key").persist()
     guarded = _bucket_guard(
         banded, id_col, max_bucket_size, hot_bucket_action, "simhash_band_candidates"
     )
@@ -882,7 +882,7 @@ def ngram_jaccard_pairs(
         F.when(F.col("sh").isNotNull(), F.xxhash64(F.col("sh"))).alias("sh"),
     )
     sh = sh.persist()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    sizes = sh.groupBy(name_col(id_col)).agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(
@@ -1222,8 +1222,8 @@ def dedup_incremental_near(
     _check_verify_threshold(threshold)
     if check_disjoint_ids:
         colliding = (
-            new_df.select(id_col)
-            .join(store_df.select(id_col), id_col, "left_semi")
+            new_df.select(name_col(id_col))
+            .join(store_df.select(name_col(id_col)), id_col, "left_semi")
             .limit(5)
             .collect()
         )
@@ -1250,8 +1250,8 @@ def dedup_incremental_near(
     # The delta/store id spaces are disjoint by contract, so one unioned
     # shingle relation serves both verify sides.
     sh = (
-        fan_out(new_df.select(id_col, text_col))
-        .unionByName(fan_out(store_df.select(id_col, text_col)))
+        fan_out(new_df.select(name_col(id_col), name_col(text_col)))
+        .unionByName(fan_out(store_df.select(name_col(id_col), name_col(text_col))))
         .select(
             name_col(id_col),
             F.array_distinct(word_shingles(text_col, shingle_n)).alias("__shs"),
@@ -1575,7 +1575,7 @@ def substring_kgram_pairs(
             ).alias("__sh"),
         )
         .filter(F.col("__sh").isNotNull())
-        .select(id_col, F.xxhash64("__sh").alias("__h"))
+        .select(name_col(id_col), F.xxhash64("__sh").alias("__h"))
         .persist()
     )
     if max_bucket_size is not None:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 def normalize_text(c: Column | str) -> Column:
     """Lowercase + collapse internal whitespace + trim: the canonical form
     used by fingerprinting and shingling."""
-    c = F.col(c) if isinstance(c, str) else c
+    c = name_col(c) if isinstance(c, str) else c
     return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
 
 
@@ -112,7 +112,7 @@ def word_shingles(c: Column | str, n: int = 3) -> Column:
 
 def punct_ratio(c: Column | str) -> Column:
     """Fraction of characters that are punctuation ``.,!?;:`` (0 for empty)."""
-    c = F.col(c) if isinstance(c, str) else c
+    c = name_col(c) if isinstance(c, str) else c
     total = F.length(c)
     stripped = F.length(F.regexp_replace(c, r"[.,!?;:]", ""))
     return F.when(total > 0, (total - stripped) / total).otherwise(F.lit(0.0))
@@ -138,7 +138,7 @@ def quality_score(c: Column | str, target_len: int = 500) -> Column:
     codes.py:89-93; this is their text-pipeline generalization (length /
     punctuation / stopword signals, SURVEY §7 phase 4).
     """
-    c = F.col(c) if isinstance(c, str) else c
+    c = name_col(c) if isinstance(c, str) else c
     length_part = F.least(F.lit(1.0), F.length(c) / F.lit(float(target_len)))
     return length_part * (1.0 - punct_ratio(c)) * (1.0 - stopword_ratio(c) / 2.0)
 
@@ -198,7 +198,7 @@ def token_count_bpe(c: Column | str) -> Column:
     "token budget" estimator for LLM-pipeline accounting (whitespace count
     undercounts punctuation-heavy text).  Pure regexp_extract_all: JVM-side,
     codegen-eligible, no vocabulary needed."""
-    c = F.col(c) if isinstance(c, str) else c
+    c = name_col(c) if isinstance(c, str) else c
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_REGEX), 0))
 
 

@@ -21,6 +21,7 @@ at JVM exit when none exists yet — see :func:`_class_data_launch`.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import hashlib
 import json
 import os
@@ -183,10 +184,11 @@ def get_spark(
             spark = builder.getOrCreate()
         finally:
             del os.environ["SPARK_CONF_DIR"]
-        if launch.dump_to is not None:
-            from pyspark import SparkContext
+        from pyspark import SparkContext
 
-            proc = SparkContext._gateway.proc
+        # A Connect session launches no local gateway, hence no dump.
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if launch.dump_to is not None and proc is not None:
             atexit.register(_promote_archive, proc, launch.dump_to, os.getpid())
     apply_runtime_confs(spark)
     return spark
@@ -206,12 +208,23 @@ _LAUNCH_ENV = (
     "SPARK_CLASSPATH",
     "PYSPARK_SUBMIT_ARGS",
     "PYSPARK_GATEWAY_PORT",
+    # Spark Connect: getOrCreate returns a remote session, no local driver.
+    "SPARK_REMOTE",
+    "SPARK_CONNECT_MODE_ENABLED",
+    "SPARK_LOCAL_REMOTE",
+    "SPARK_API_MODE",
 )
 
 #: How long interpreter exit waits for the driver JVM to write its archive
 #: (stopping a ``ww_pipeline`` session took 18.5 s with the dump, about 1 s
 #: without, on a 4-vCPU host).
 _DUMP_WAIT_S = 300
+
+#: Archives kept in the cache, counting the one just recorded.  A new
+#: ``java`` build, jar set or heap flag gives a new key; a promotion keeps
+#: the most recently used archives of other keys up to this count and
+#: deletes the rest, so superseded archives do not pile up.
+_KEEP_ARCHIVES = 2
 
 
 class _ClassDataLaunch(NamedTuple):
@@ -250,6 +263,11 @@ def _class_data_launch(master: str, driver_memory: str) -> _ClassDataLaunch | No
       private ``<key>.<pid>.tmp`` that :func:`_promote_archive` renames
       into place only after the JVM exited with status 0, recording the
       size in the name; an archive whose size does not match is deleted.
+
+    The gain needs an archive that survives from one process to the next.
+    The first session per cache and key pays for the dump instead (slower
+    start, and its process waits for the dump at exit); an environment
+    that starts every run with an empty cache pays it on every run.
     """
     from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
@@ -297,6 +315,9 @@ def _class_data_launch(master: str, driver_memory: str) -> _ClassDataLaunch | No
                     archive = entry.path
                 else:
                     os.unlink(entry.path)
+        if archive is not None:
+            with contextlib.suppress(OSError):  # the mtime records the last use
+                os.utime(archive)
     except OSError:
         return None
     if archive is not None:
@@ -340,10 +361,17 @@ def _promote_archive(proc: subprocess.Popen, dump_to: str, owner: int) -> None:
         key = name.split(".")[0]
         final = f"{key}.{size}.jsa"
         os.replace(dump_to, os.path.join(cds, final))
-        for entry in os.scandir(cds):
-            if entry.name.startswith(key + ".") and entry.name.endswith(".jsa"):
-                if entry.name != final:
-                    os.unlink(entry.path)
+        archives = [e for e in os.scandir(cds) if e.name.endswith(".jsa")]
+        # Other archives of this key are stale; of other keys' archives,
+        # the most recently used stay.
+        stale = [e for e in archives if e.name.startswith(key + ".") and e.name != final]
+        others = sorted(
+            (e for e in archives if not e.name.startswith(key + ".")),
+            key=lambda e: e.stat().st_mtime,
+            reverse=True,
+        )
+        for entry in stale + others[_KEEP_ARCHIVES - 1:]:
+            os.unlink(entry.path)
     except OSError:
         pass
 

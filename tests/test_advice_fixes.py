@@ -309,7 +309,8 @@ def test_backtick_column_names_through_sql_rendered_ops(spark, sf_small):
     shingle consumer with a ParseException.  Each rendering site now
     escapes through one quoting helper: the fused LSH verify, the n-gram
     Jaccard, tokenize and rhp_sign must accept the odd name and return
-    exactly what the plain-named column returns."""
+    exactly what the plain-named column returns.  Every operator taking an
+    id, vector or text column name must accept an odd one too."""
     from cdc_wastewater_analysis_ml_spark.operators import similarity as SIM
     from cdc_wastewater_analysis_ml_spark.operators import text as T
 
@@ -354,6 +355,39 @@ def test_backtick_column_names_through_sql_rendered_ops(spark, sf_small):
     assert rows(D.minhash_lsh_verified(odd_ids, "text", odd), *pair_cols) == rows(
         D.minhash_lsh_verified(docs, "text", "doc_id"), *pair_cols
     )
+    # Every operator taking an id column, with an odd one.
+    for op, cols in (
+        (D.simhash_band_candidates, ("id_a", "id_b")),
+        (D.ngram_jaccard_pairs, pair_cols),
+        (D.substring_kgram_pairs, ("id_a", "id_b", "n_shared_spans")),
+    ):
+        assert rows(op(odd_ids, "text", odd), *cols) == rows(
+            op(docs, "text", "doc_id"), *cols
+        ), op.__name__
+    exact_cols = ("fp", "doc_id", "dup_count")
+    assert rows(D.dedup_exact(odd_ids, "text", odd), "fp", odd, "dup_count") == rows(
+        D.dedup_exact(docs, "text", "doc_id"), *exact_cols
+    )
+    # ...and the fingerprint path with an odd text column.
+    assert rows(D.dedup_exact(renamed, odd, "doc_id"), *exact_cols) == rows(
+        D.dedup_exact(docs, "text", "doc_id"), *exact_cols
+    )
+    new, store = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+    assert rows(
+        D.dedup_incremental_exact(
+            new.withColumnRenamed("text", odd), store.withColumnRenamed("text", odd),
+            odd, "doc_id",
+        ),
+        "doc_id", odd,
+    ) == rows(D.dedup_incremental_exact(new, store, "text", "doc_id"), "doc_id", "text")
+
+    def near(n, s, id_col):
+        return D.dedup_incremental_near(n, s, "text", id_col, check_disjoint_ids=True)
+
+    assert rows(
+        near(new.withColumnRenamed("doc_id", odd), store.withColumnRenamed("doc_id", odd), odd),
+        odd, "text",
+    ) == rows(near(new, store, "doc_id"), "doc_id", "text")
     # A plain name gives the very same plan as before.
     def logical(col):
         return docs.alias("a").select(col)._jdf.queryExecution().logical().toString()

@@ -129,7 +129,56 @@ def test_real_spark_conf_file_disables_the_archive(tmp_path):
     assert not (cache / "spark-graft").exists()
 
 
+# Starts no JVM: captures the options get_spark hands to getOrCreate.
+CONNECT_PROBE = """
+import json
+from pyspark.errors import PySparkImportError, PySparkRuntimeError
+from pyspark.sql import SparkSession
+from cdc_wastewater_analysis_ml_spark.session import _class_data_launch, get_spark
+
+class Captured(Exception):
+    pass
+
+def capture(builder):
+    raise Captured(json.dumps(builder._options))
+
+SparkSession.Builder.getOrCreate = capture
+try:
+    get_spark("connect-probe")
+except Captured as exc:
+    flags = [k for k in json.loads(str(exc)) if "JavaOptions" in k]
+except (PySparkImportError, PySparkRuntimeError) as exc:  # refused before any launch
+    flags = exc.getCondition()
+print(json.dumps([flags, _class_data_launch("local[*]", "8g") is None]))
+"""
+
+
+@pytest.mark.parametrize("var,value", [
+    ("SPARK_REMOTE", "sc://localhost:15002"),
+    ("SPARK_CONNECT_MODE_ENABLED", "1"),
+    ("SPARK_LOCAL_REMOTE", "1"),
+    ("SPARK_API_MODE", "connect"),
+])
+def test_spark_connect_gets_no_class_data_flags(tmp_path, var, value):
+    """Any of these makes getOrCreate return a Connect session: no local
+    driver JVM is launched, so flags would only reach the server.  Where
+    pyspark refuses before any launch (``SPARK_REMOTE`` next to get_spark's
+    master, or no Connect client installed), no flags are built either."""
+    cache = tmp_path / "xdg"
+    out = _run(["-c", CONNECT_PROBE], _env(cache, **{var: value}))
+    flags, no_launch = json.loads(out.splitlines()[-1])
+    assert (flags == [] or isinstance(flags, str)) and no_launch, flags
+    assert not (cache / "spark-graft").exists()
+    # The same probe without the variable does pass the flags.
+    out = _run(["-c", CONNECT_PROBE], _env(cache))
+    assert json.loads(out.splitlines()[-1]) == [["spark.driver.extraJavaOptions"], False]
+
+
 def test_only_a_clean_jvm_exit_promotes_the_dump(tmp_path):
+    """A promotion also deletes the key's previous archive and keeps, of
+    other keys' archives (an older ``java`` build or heap flag), only the
+    most recently used."""
+
     class Exited:  # a driver JVM that already exited with ``returncode``
         def __init__(self, returncode):
             self.returncode = returncode
@@ -142,6 +191,9 @@ def test_only_a_clean_jvm_exit_promotes_the_dump(tmp_path):
     _promote_archive(Exited(1), str(dump), os.getpid())
     assert list(tmp_path.iterdir()) == []
     dump.write_bytes(b"x" * 10)
-    (tmp_path / "k.7.jsa").write_bytes(b"y" * 7)  # the previous archive
+    # name → last use (mtime); k.7 is the key's previous archive.
+    for name, used in {"a.7.jsa": 2000, "b.7.jsa": 1000, "k.7.jsa": 3000}.items():
+        (tmp_path / name).write_bytes(b"y" * 7)
+        os.utime(tmp_path / name, (used, used))
     _promote_archive(Exited(0), str(dump), os.getpid())
-    assert [p.name for p in tmp_path.iterdir()] == ["k.10.jsa"]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["a.7.jsa", "k.10.jsa"]
