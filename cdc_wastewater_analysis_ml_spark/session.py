@@ -155,24 +155,29 @@ def get_spark(
                     )
             apply_runtime_confs(active)
             return active
-    if master is None:
+    # SPARK_REMOTE names a Spark Connect server: pyspark refuses a master
+    # next to it, and the server owns its driver's launch confs.
+    remote = master is None and "SPARK_REMOTE" in os.environ
+    if master is None and not remote:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", driver_memory)
-        .config("spark.ui.enabled", "false")
-    )
+    builder = SparkSession.builder.appName(app_name)
+    if not remote:
+        builder = (
+            builder.master(master)
+            .config("spark.driver.memory", driver_memory)
+            .config("spark.ui.enabled", "false")
+        )
+    builder = builder.config(
+        "spark.sql.shuffle.partitions", str(shuffle_partitions)
+    ).config("spark.sql.parquet.filterPushdown", "true")
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    launch = _class_data_launch(master, driver_memory)
+    launch = None if remote else _class_data_launch(master, driver_memory)
     if launch is None:
         spark = builder.getOrCreate()
     else:

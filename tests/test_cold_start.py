@@ -146,10 +146,11 @@ SparkSession.Builder.getOrCreate = capture
 try:
     get_spark("connect-probe")
 except Captured as exc:
-    flags = [k for k in json.loads(str(exc)) if "JavaOptions" in k]
+    options = json.loads(str(exc))
+    flags = [k for k in options if "JavaOptions" in k]
 except (PySparkImportError, PySparkRuntimeError) as exc:  # refused before any launch
-    flags = exc.getCondition()
-print(json.dumps([flags, _class_data_launch("local[*]", "8g") is None]))
+    options = flags = exc.getCondition()
+print(json.dumps([flags, _class_data_launch("local[*]", "8g") is None, options]))
 """
 
 
@@ -162,16 +163,22 @@ print(json.dumps([flags, _class_data_launch("local[*]", "8g") is None]))
 def test_spark_connect_gets_no_class_data_flags(tmp_path, var, value):
     """Any of these makes getOrCreate return a Connect session: no local
     driver JVM is launched, so flags would only reach the server.  Where
-    pyspark refuses before any launch (``SPARK_REMOTE`` next to get_spark's
-    master, or no Connect client installed), no flags are built either."""
+    pyspark refuses before any launch (no Connect client installed), no
+    flags are built either.  ``SPARK_REMOTE`` must reach getOrCreate: the
+    builder holds no master, which pyspark refuses next to it."""
     cache = tmp_path / "xdg"
     out = _run(["-c", CONNECT_PROBE], _env(cache, **{var: value}))
-    flags, no_launch = json.loads(out.splitlines()[-1])
+    flags, no_launch, options = json.loads(out.splitlines()[-1])
     assert (flags == [] or isinstance(flags, str)) and no_launch, flags
+    if var == "SPARK_REMOTE":
+        assert isinstance(options, dict), options
+        assert flags == [] and "spark.master" not in options, options
     assert not (cache / "spark-graft").exists()
     # The same probe without the variable does pass the flags.
     out = _run(["-c", CONNECT_PROBE], _env(cache))
-    assert json.loads(out.splitlines()[-1]) == [["spark.driver.extraJavaOptions"], False]
+    flags, no_launch, options = json.loads(out.splitlines()[-1])
+    assert [flags, no_launch] == [["spark.driver.extraJavaOptions"], False]
+    assert options["spark.master"].startswith("local[")
 
 
 def test_only_a_clean_jvm_exit_promotes_the_dump(tmp_path):

@@ -1,65 +1,13 @@
-"""Staleness registration is mechanical, not a judgment call (VERDICT r5
-task 3): every package module touched since the previous round's driver
-commit must be registered in ``__spark_entry__._MODULE_CHANGED_IN_ROUND`` at
-the current round, and changed registry files must list every AST-affected
-``@register`` block as a stale consumer.
+"""``tools/staleness.py``: the driver's round epoch, the call-path
+fingerprints that decide which CORRECTNESS rows still certify a query, and
+the committed per-round snapshots of them (``FINGERPRINTS.json``)."""
 
-These tests are self-neutralizing after the round closes: once the driver
-commits ``round N: ...``, the diff base advances and the worktree diff is
-empty — they only bite while edits are in flight, which is exactly when the
-map must be maintained.
-"""
-
+import json
 import subprocess
 
-import pytest
-
-import __spark_entry__ as entry
 from tools import staleness
 
-
-@pytest.fixture(scope="module")
-def audit_ctx():
-    root = staleness.repo_root()
-    try:
-        base = staleness.base_commit(root)
-    except (subprocess.CalledProcessError, FileNotFoundError):
-        pytest.skip("git unavailable")
-    if base is None:
-        pytest.skip("no prior-round driver commit to diff against")
-    return root, base, staleness.current_round(root)
-
-
-def test_changed_modules_are_registered_at_current_round(audit_ctx):
-    root, base, rnd = audit_ctx
-    changed = staleness.changed_package_files(root, base)
-    missing = {
-        rel: entry._MODULE_CHANGED_IN_ROUND.get(rel)
-        for rel in changed
-        if entry._MODULE_CHANGED_IN_ROUND.get(rel, -1) < rnd
-    }
-    assert not missing, (
-        f"modules changed since {base[:10]} but not registered at round {rnd} "
-        f"in _MODULE_CHANGED_IN_ROUND: {missing}"
-    )
-
-
-def test_changed_registry_files_list_all_ast_affected_queries(audit_ctx):
-    root, base, rnd = audit_ctx
-    problems = {}
-    for rel in staleness.changed_package_files(root, base):
-        if not rel.split("/")[-1].startswith("registry"):
-            continue
-        required = staleness.registry_required_consumers(root, base, rel)
-        listed = entry.effective_consumers(
-            rel, entry._MODULE_CHANGED_IN_ROUND.get(rel, -1)
-        )
-        if not required <= listed:
-            problems[rel] = sorted(required - listed)
-    assert not problems, (
-        f"AST-affected @register blocks missing from the effective consumer "
-        f"set (overlay or derived routes): {problems}"
-    )
+ROOT = staleness.repo_root()
 
 
 def test_current_round_survives_judge_seam(tmp_path):
@@ -101,19 +49,6 @@ def test_current_round_fallback_without_marker(tmp_path):
     assert staleness.current_round(tmp_path) == 1
     (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
     assert staleness.current_round(tmp_path) == 2
-
-
-def test_consumer_lists_name_real_queries():
-    """Guard against typos: every consumer name must exist in the registry
-    (new not-yet-implemented names would silently invalidate nothing)."""
-    from cdc_wastewater_analysis_ml_spark.plans.registry import QUERIES
-
-    unknown = {
-        key: [n for n in names if n not in QUERIES]
-        for key, names in entry._ROUND_AFFECTED.items()
-    }
-    unknown = {m: ns for m, ns in unknown.items() if ns}
-    assert not unknown, f"consumer names not in registry: {unknown}"
 
 
 def test_mid_round_snapshot_does_not_advance_epoch(tmp_path):
@@ -187,67 +122,29 @@ def test_body_verdict_mention_does_not_advance_epoch(tmp_path):
     assert staleness.base_commit(tmp_path) == verdict_sha
 
 
-def test_no_duplicate_keys_in_hand_maintained_maps():
-    """r12 review: _MODULE_CHANGED_IN_ROUND carried a duplicate
-    "plans/registry.py" key for four rounds — Python dict literals keep the
-    LAST duplicate silently, so an edit to the earlier (shadowed) entry
-    would be ignored and the intended invalidation never applied.  Parse
-    the dict literals and fail on any textual duplicate key."""
-    import ast
-    from pathlib import Path
-
-    src = (Path(__file__).resolve().parent.parent / "__spark_entry__.py").read_text()
-    tree = ast.parse(src)
-    checked = 0
-    for node in ast.walk(tree):
-        if not isinstance(node, ast.AnnAssign) or not isinstance(node.value, ast.Dict):
-            continue
-        name = getattr(node.target, "id", "")
-        if name not in ("_MODULE_CHANGED_IN_ROUND", "_ROUND_AFFECTED"):
-            continue
-        checked += 1
-        keys = [ast.literal_eval(k) for k in node.value.keys if k is not None]
-        dupes = {k for k in keys if keys.count(k) > 1}
-        assert not dupes, f"{name} has duplicate key(s): {dupes}"
-    assert checked == 2, "expected to find both hand-maintained maps"
 
 
-def test_derived_routes_available_and_cover_overlays():
-    """ADVICE r12 #3: the full forward route map is DERIVED from imports +
-    call sites (tools/staleness.derive_module_routes) and is the staleness
-    fallback for any (module, round) without an explicit overlay.  The
-    derivation must (a) import-succeed in the driver's environment, (b)
-    know every registered query, and (c) be a superset of every overlay
-    subset — an overlay naming a query the derivation can't see would mean
-    the fallback under-stales relative to the hand judgment."""
-    from cdc_wastewater_analysis_ml_spark.plans.registry import QUERIES
-
-    routes = entry._DERIVED_ROUTES
-    assert routes is not None, "route derivation failed at import"
-    seen = set().union(*routes.values())
-    assert seen == set(QUERIES), (
-        f"derivation missed queries: {sorted(set(QUERIES) - seen)}"
+def test_fingerprint_manifest_is_fresh():
+    """Every round with a CORRECTNESS file has a snapshot in
+    ``FINGERPRINTS.json``, and the latest one recomputes identically from
+    its verdict commit (catches a changed fingerprint algorithm that was
+    never regenerated).  Fix: ``python -m tools.staleness``.  A round whose
+    verdict commit has not landed yet (the driver writes the CORRECTNESS
+    file first) cannot have a snapshot and is not due."""
+    manifest = json.loads((ROOT / staleness.MANIFEST).read_text())
+    rounds = staleness.correctness_rounds(ROOT)
+    try:
+        commits = dict(reversed(staleness.verdict_commits(ROOT)))
+    except (subprocess.CalledProcessError, FileNotFoundError):
+        commits = None  # no git history: every round is due
+    due = sorted(r for r in rounds if commits is None or r in commits)
+    missing = [r for r in due if not isinstance(manifest.get(str(r)), dict)]
+    assert not missing, (
+        f"{staleness.MANIFEST} has no snapshot for round(s) {missing}; "
+        "run python -m tools.staleness"
     )
-    problems = {
-        key: sorted(set(names) - routes.get(key[0], set()))
-        for key, names in entry._ROUND_AFFECTED.items()
-    }
-    problems = {k: v for k, v in problems.items() if v}
-    assert not problems, (
-        f"overlay consumers outside the derived route map: {problems}"
-    )
-
-
-def test_round_bump_without_overlay_falls_back_to_full_routes():
-    """The fail-safe the overlay exists for: a (module, round) pair with no
-    overlay entry must stale the module's FULL derived route set, never an
-    older round's trim."""
-    routes = entry._DERIVED_ROUTES
-    assert routes is not None
-    # operators/dedup.py has an overlay at its current round; a hypothetical
-    # future round must fall back to the full (much larger) derived set.
-    cur = entry._MODULE_CHANGED_IN_ROUND["operators/dedup.py"]
-    trimmed = entry.effective_consumers("operators/dedup.py", cur)
-    full = entry.effective_consumers("operators/dedup.py", cur + 1)
-    assert full == routes["operators/dedup.py"]
-    assert trimmed < full, "expected the overlay to be a strict narrowing"
+    if commits and due:
+        latest = due[-1]
+        assert manifest[str(latest)] == staleness.snapshot(
+            ROOT, commits[latest], rounds[latest]
+        ), f"round {latest} snapshot is stale; run python -m tools.staleness"

@@ -1,10 +1,10 @@
 """Rotation-prefix budget simulator (r12): print what the driver's 50-row
-CORRECTNESS prefix will contain at HEAD — how many rows are STALE (changed
-module, no green row at the change round yet), whether they all fit the
-prefix, and which green cohort fills the remainder.  The per-round budget
-rule (VERDICT r11 task 4): stale + due must fit 50 or the overflow slips a
-round; run this after registering staleness to see the cost of an edit
-BEFORE the driver does.
+CORRECTNESS prefix will contain at HEAD — how many rows are STALE (no green
+row certifies the query's current call-path fingerprint), whether they all
+fit the prefix, and which green cohort fills the remainder.  The per-round
+budget rule (VERDICT r11 task 4): stale + due must fit 50 or the overflow
+slips a round; run this after an edit to see its cost BEFORE the driver
+does.
 
 Usage: python -m tools.rotation_sim [prefix_len]
 """
@@ -25,7 +25,7 @@ def main() -> None:
     import __spark_entry__ as E
 
     ordered = list(E.queries())
-    green = E._last_green_round()
+    green = E._last_green_round(E._ROOT, E._current_fingerprints())
     stale = [n for n in ordered if n not in green]
     head = ordered[:prefix_len]
     in_head = [n for n in stale if n in head]

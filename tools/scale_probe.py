@@ -136,8 +136,7 @@ if SMALL_LABEL != "sf0.1" and not OUT_NAME:
 
 def build_session(app_name: str = "scale_probe", port: int = 4049) -> SparkSession:
     """Probe session: local[32], UI enabled for the REST stage counters.
-    Shared by the probe tools (pairs_probe, contamination_probe,
-    broadcast_audit, stage_profile) so they measure one session shape."""
+    Shared with ``stage_profile`` so both measure one session shape."""
     b = (
         SparkSession.builder.appName(app_name)
         .master("local[32]")

@@ -1,94 +1,53 @@
-"""Mechanical staleness-registration audit (VERDICT r5 task 3).
+"""Query staleness from call-path fingerprints, and the driver's round epoch.
 
-``__spark_entry__._MODULE_CHANGED_IN_ROUND`` invalidates prior-round green
-CORRECTNESS rows for queries routed through changed modules.  Three rounds
-in a row, the weak link was a HUMAN judgment call — "this diff is textually
-additive, nothing re-verifies" — applied to a file the map then omitted.
-This module computes the ground truth from git + the AST, so the pytest in
-``tests/test_staleness_registration.py`` can enforce:
+The driver verifies a bounded prefix of ``queries()`` each round and commits
+the rows as ``CORRECTNESS_r{N}.json`` with a ``round N: verdict`` commit.  A
+green row certifies the code it ran on, and :func:`fingerprints` names that
+code per registry query: a sha256 over the AST of every top-level definition
+the query's ``@register`` function reaches (decorator and oracle SQL
+included, docstrings dropped; comments are not in the AST).  Names are
+followed to a fixpoint through module-local definitions, package-internal
+imports (re-exports through ``__init__.py`` included), ``Alias.attr`` on a
+module alias, and a module alias used as a bare value (all of that module's
+definitions).  Unresolvable attributes of a package module count as the
+whole module, so the closure errs wide, never narrow.
 
-1. every ``.py`` under the package changed since the previous round's
-   driver commit appears in the map AT the current round (file granularity,
-   additive or not);
-2. for changed ``plans/registry*.py`` files, the consumer set covers every
-   query whose ``@register`` block is AST-affected by the diff — directly,
-   or transitively through changed module-level helpers it mentions
-   (fixpoint over the helper-mention graph), so "only helper X changed and
-   nothing uses it" is a computed fact rather than an argument.
+``FINGERPRINTS.json`` (repo root) holds one snapshot per round that has a
+``CORRECTNESS_r{N}.json``: ``{round: {query: fingerprint}}`` for the queries
+with a row in that round, computed on the tree of the round's verdict
+commit.  ``__spark_entry__`` compares them with the fingerprints of the code
+now.  Regenerate the file after each verdict round:
 
-Operator/source/streaming modules stay at file granularity.  Consumer sets
-come from the per-(module, round) ``_ROUND_AFFECTED`` overlay when one is
-recorded, else from :func:`derive_module_routes` below — the conservative
-full route map computed from imports + call sites (ADVICE r12 #3), so a
-round bump that forgets to narrow stales the full route set rather than
-inheriting a previous round's trim.
+    python -m tools.staleness
 """
 
 from __future__ import annotations
 
 import ast
+import hashlib
+import io
 import json
 import re
 import subprocess
+import tarfile
+import tempfile
 from pathlib import Path
 
 PKG = "cdc_wastewater_analysis_ml_spark"
+MANIFEST = "FINGERPRINTS.json"
+
+#: (package-relative file, top-level name); name "*" stands for the module
+#: used as a value.
+Key = tuple[str, str]
 
 
 def repo_root() -> Path:
     return Path(__file__).resolve().parent.parent
 
 
-def current_round(root: Path) -> int:
-    """Round currently being built = 1 + the round of the latest
-    ``round N: verdict`` driver marker commit.
-
-    Derived from the MARKER, not from the ``CORRECTNESS_r*.json`` artifacts
-    (the r6 judge seam): the driver drops ``CORRECTNESS_r{N}.json`` BEFORE it
-    commits the ``round N:`` marker, so during that window an artifact-based
-    count demands round N+1 registration for round-N edits the round-N driver
-    run already re-verified green — a false positive exactly when the audit's
-    credibility matters.  The marker and the diff base (``base_commit``)
-    advance together, so marker-derived rounds keep "changed since base" and
-    "registered at current round" consistent at every commit, including the
-    judge seam (VERDICT r6 task 1).
-
-    Only the VERDICT marker advances the epoch (r10 seam): the driver also
-    commits ``round N: end-of-round snapshot`` checkpoints, and when a round
-    is split across interrupted sessions a snapshot can land MID-round with
-    building continuing after it (observed r4 and r10).  A snapshot is not a
-    verification event — the round-N driver check still lies ahead — so
-    treating it as the epoch boundary would demand round-N+1 registration
-    for edits the round-N check will verify, and (worse) hide the round's
-    earlier, snapshot-committed edits from the changed-files audit.
-    """
-    try:
-        hits = _git(
-            root, "log", "-E", "--grep", r"^round [0-9]+: verdict",
-            "--format=%s",
-        ).splitlines()
-    except subprocess.CalledProcessError:  # unborn branch: no commits at all
-        hits = []
-    # The grep above matches any line of the MESSAGE, not just the subject
-    # (r10 ADVICE): a snapshot whose BODY quotes "round N: verdict" would be
-    # selected while its subject is still "round N: end-of-round snapshot" —
-    # and a loose `round (\d+):` subject parse would then silently
-    # reintroduce the mid-round epoch-advance seam.  Each hit's SUBJECT is
-    # therefore re-validated against the verdict marker, skipping past
-    # body-only hits to the most recent GENUINE verdict commit (not straight
-    # to the artifact fallback, which mis-counts during the judge seam).
-    for subject in hits:
-        m = re.match(r"round (\d+): verdict", subject)
-        if m:
-            return int(m.group(1)) + 1
-    # No marker yet (round 1, or a fresh clone without driver history):
-    # fall back to the artifact count so the audit still has an epoch.
-    rounds = [
-        int(g.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (g := re.search(r"r(\d+)", p.name))
-    ]
-    return max(rounds, default=0) + 1
+# ---------------------------------------------------------------------------
+# Round epoch (driver verdict commits)
+# ---------------------------------------------------------------------------
 
 
 def _git(root: Path, *args: str) -> str:
@@ -100,327 +59,317 @@ def _git(root: Path, *args: str) -> str:
     ).stdout
 
 
-def base_commit(root: Path) -> str | None:
-    """The previous round's driver VERDICT commit (subject ``round N:
-    verdict/...``) — snapshots don't advance the diff base, matching
-    :func:`current_round`'s epoch rule.  Mirrors the subject re-validation
-    (r10 ADVICE): the grep matches message BODIES too, so the selected
-    commit's %s must itself carry the verdict marker or we fall back to
-    no-base, keeping the diff base and the epoch in lockstep."""
+def verdict_commits(root: Path) -> list[tuple[int, str]]:
+    """``(round, sha)`` of every driver VERDICT commit, newest first.
+
+    ``git log --grep`` matches any line of the message, so a snapshot commit
+    whose body quotes ``round N: verdict`` is selected too (r10 ADVICE);
+    each hit's SUBJECT is re-validated against the marker, and only genuine
+    verdict commits are returned.  ``round N: end-of-round snapshot``
+    commits can land mid-round (observed r4 and r10) and are not
+    verification events, so they never count."""
     hits = _git(
         root, "log", "-E", "--grep", r"^round [0-9]+: verdict",
         "--format=%H %s",
     ).splitlines()
-    out = ""
+    out = []
     for line in hits:
         sha, _, subject = line.partition(" ")
-        if re.match(r"round \d+: verdict", subject):
-            out = sha
-            break
-    return out or None
-
-
-def changed_package_files(root: Path, base: str) -> list[str]:
-    """Package-relative paths of query-defining ``.py`` files that differ
-    between ``base`` and the WORKTREE — uncommitted edits count, and so do
-    brand-new UNTRACKED files (git diff alone would let a new module ship
-    unregistered until its first commit)."""
-    out = _git(root, "diff", "--name-only", base, "--", PKG)
-    out += _git(root, "ls-files", "--others", "--exclude-standard", "--", PKG)
-    rels = []
-    for line in sorted(set(out.splitlines())):
-        p = Path(line)
-        if p.suffix != ".py" or p.name in ("__init__.py", "__main__.py"):
-            continue
-        if not (root / p).exists():  # deleted: import of registry covers it
-            continue
-        rels.append(str(p.relative_to(PKG)))
-    return sorted(rels)
-
-
-# ---------------------------------------------------------------------------
-# AST block-diff for registry files
-# ---------------------------------------------------------------------------
-
-
-def _top_level_defs(src: str) -> dict[str, str]:
-    """name -> AST dump for every top-level function / simple assignment."""
-    defs: dict[str, str] = {}
-    for node in ast.parse(src).body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            defs[node.name] = ast.dump(node)
-        elif isinstance(node, ast.Assign):
-            for tgt in node.targets:
-                if isinstance(tgt, ast.Name):
-                    defs[tgt.id] = ast.dump(node)
-        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
-            defs[node.target.id] = ast.dump(node)
-    return defs
-
-
-def _registered_query(node: ast.FunctionDef) -> str | None:
-    """Query name if ``node`` carries a ``@register("name", ...)`` decorator."""
-    for dec in node.decorator_list:
-        if (
-            isinstance(dec, ast.Call)
-            and isinstance(dec.func, ast.Name)
-            and dec.func.id == "register"
-            and dec.args
-            and isinstance(dec.args[0], ast.Constant)
-            and isinstance(dec.args[0].value, str)
-        ):
-            return dec.args[0].value
-    return None
-
-
-def _mentions(node: ast.AST) -> set[str]:
-    return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
-
-
-def registry_required_consumers(root: Path, base: str, rel_pkg_path: str) -> set[str]:
-    """Query names a changed registry file MUST list as stale consumers.
-
-    New file (absent at ``base``) → every query it registers (they are
-    never-verified anyway, so listing them invalidates nothing).
-    """
-    path = root / PKG / rel_pkg_path
-    new_src = path.read_text()
-    try:
-        old_src = _git(root, "show", f"{base}:{PKG}/{rel_pkg_path}")
-    except subprocess.CalledProcessError:
-        old_src = None
-
-    new_defs = _top_level_defs(new_src)
-    tree = ast.parse(new_src)
-    fn_nodes = {
-        n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)
-    }
-    queries = {
-        name: q
-        for name, n in fn_nodes.items()
-        if (q := _registered_query(n)) is not None
-    }
-    if old_src is None:
-        return set(queries.values())
-
-    old_defs = _top_level_defs(old_src)
-    changed = {
-        name
-        for name, dump in new_defs.items()
-        if old_defs.get(name) != dump
-    }
-    # Fixpoint: a def that mentions a changed top-level name is changed too
-    # (helper → helper → query chains).  Mentions are computed on the NEW
-    # source; a def that stopped mentioning a helper no longer depends on it.
-    mention_map = {}
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef):
-            mention_map[node.name] = _mentions(node) - {node.name}
-        elif isinstance(node, ast.Assign) and all(
-            isinstance(t, ast.Name) for t in node.targets
-        ):
-            tgts = {t.id for t in node.targets}
-            for t in tgts:
-                mention_map[t] = _mentions(node.value) - tgts
-    while True:
-        grew = {
-            name
-            for name, ment in mention_map.items()
-            if name not in changed and ment & changed
-        }
-        if not grew:
-            break
-        changed |= grew
-    return {queries[name] for name in changed if name in queries}
-
-
-def audit(root: Path | None = None) -> dict:
-    """One-shot report (also handy interactively: python -m tools.staleness)."""
-    root = root or repo_root()
-    base = base_commit(root)
-    rnd = current_round(root)
-    files = changed_package_files(root, base) if base else []
-    report = {"base": base, "round": rnd, "changed_files": files, "registry": {}}
-    for rel in files:
-        if Path(rel).name.startswith("registry"):
-            report["registry"][rel] = sorted(
-                registry_required_consumers(root, base, rel)
-            )
-    return report
-
-
-if __name__ == "__main__":
-    print(json.dumps(audit(), indent=2))
-
-
-# ---------------------------------------------------------------------------
-# Full forward-route derivation (ADVICE r12 #3)
-# ---------------------------------------------------------------------------
-#
-# ``__spark_entry__`` consumes this as its staleness fallback: the full forward
-# route map (module -> every registry query routing through it); per-round
-# narrowing lives in the separate ``_ROUND_AFFECTED`` overlay keyed by
-# (module, round), so a future round-bump that forgets to narrow falls back
-# to staling the FULL route set instead of inheriting a stale trim.  The
-# derivation below computes a conservative route map from imports + call
-# sites so a test can enforce ``derived ⊆ hand-maintained`` — the full map
-# can drift WIDER than reality (over-staling is safe) but never narrower.
-#
-# Method, per registry file: map every import (file-level and function-local)
-# to the package-internal module file it binds; for each ``@register`` block,
-# fixpoint the names it mentions through module-local top-level helpers; any
-# mentioned name bound by an import routes the query to that module.  Routes
-# then expand through the package-internal import graph transitively (a
-# query routing through operators/dedup.py also routes through everything
-# dedup.py imports, e.g. operators/caching.py) — conservative by design.
-
-
-def _module_file(root: Path, parts: list[str]) -> str | None:
-    """PKG-relative file for a dotted path inside the package, else None."""
-    rel = "/".join(parts)
-    if not rel:
-        return None
-    if (root / PKG / (rel + ".py")).is_file():
-        return rel + ".py"
-    if (root / PKG / rel / "__init__.py").is_file():
-        return rel + "/__init__.py"
-    return None
-
-
-def _import_bindings(
-    root: Path, pkg_parts: list[str], tree: ast.AST
-) -> dict[str, str]:
-    """bound-name -> PKG-relative module file, for every package-internal
-    import anywhere in ``tree`` (function-local imports included)."""
-    out: dict[str, str] = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = pkg_parts[: len(pkg_parts) - (node.level - 1)]
-                if node.level - 1 > len(pkg_parts):
-                    continue
-            else:
-                if not node.module or not (
-                    node.module == PKG or node.module.startswith(PKG + ".")
-                ):
-                    continue
-                base = node.module[len(PKG) :].lstrip(".").split(".")
-                base = [p for p in base if p]
-                for alias in node.names:
-                    tgt = _module_file(root, base + [alias.name]) or _module_file(
-                        root, base
-                    )
-                    if tgt:
-                        out[alias.asname or alias.name] = tgt
-                continue
-            mod_parts = base + (node.module.split(".") if node.module else [])
-            for alias in node.names:
-                tgt = _module_file(root, mod_parts + [alias.name]) or _module_file(
-                    root, mod_parts
-                )
-                if tgt:
-                    out[alias.asname or alias.name] = tgt
-        elif isinstance(node, ast.Import):
-            for alias in node.names:
-                if alias.name.startswith(PKG + "."):
-                    parts = alias.name[len(PKG) + 1 :].split(".")
-                    tgt = _module_file(root, parts)
-                    if tgt:
-                        out[alias.asname or alias.name.split(".")[0]] = tgt
+        m = re.match(r"round (\d+): verdict", subject)
+        if m:
+            out.append((int(m.group(1)), sha))
     return out
 
 
-def _package_import_graph(root: Path) -> dict[str, set[str]]:
-    """PKG-relative file -> PKG-relative files it imports (direct edges)."""
-    graph: dict[str, set[str]] = {}
-    for p in sorted((root / PKG).rglob("*.py")):
-        rel = str(p.relative_to(root / PKG))
-        pkg_parts = rel.split("/")[:-1]
-        try:
-            tree = ast.parse(p.read_text())
-        except SyntaxError:
-            continue
-        graph[rel] = set(_import_bindings(root, pkg_parts, tree).values())
-    return graph
+def current_round(root: Path) -> int:
+    """Round currently being built = 1 + the round of the latest verdict
+    commit.
+
+    Derived from the marker, not from the ``CORRECTNESS_r*.json`` artifacts
+    (the r6 judge seam): the driver drops ``CORRECTNESS_r{N}.json`` BEFORE it
+    commits the ``round N:`` marker, and the round it just closed is still
+    N in that window.  The marker and the diff base (:func:`base_commit`)
+    advance together.  With no marker yet (round 1, or a fresh clone without
+    driver history) the artifact count gives the epoch."""
+    try:
+        commits = verdict_commits(root)
+    except subprocess.CalledProcessError:  # unborn branch: no commits at all
+        commits = []
+    if commits:
+        return commits[0][0] + 1
+    return max(_correctness_files(root), default=0) + 1
 
 
-def _transitive_imports(graph: dict[str, set[str]], start: str) -> set[str]:
-    """Transitive import closure, with registry files TERMINAL: a registry
-    module contributes itself but never its imports.  Rationale: registry
-    files import each other only for registration side effects
-    (``plans/registry.py``'s tail imports pull every sibling in, which would
-    collapse the whole map to all-queries-everywhere), and a registry file's
-    operator imports are attributed per-query by the mention analysis — a
-    file-level ``import profile as P`` must not route every query in the
-    file through profile.py, only the blocks that mention ``P``."""
-    seen: set[str] = set()
-    frontier = [start]
-    while frontier:
-        m = frontier.pop()
-        if m in seen:
-            continue
-        seen.add(m)
-        if re.fullmatch(r"plans/registry\w*\.py", m):
-            continue
-        frontier.extend(graph.get(m, ()))
-    return seen
+def base_commit(root: Path) -> str | None:
+    """The previous round's driver verdict commit, or None before the
+    first one."""
+    commits = verdict_commits(root)
+    return commits[0][1] if commits else None
 
 
-def derive_module_routes(root: Path | None = None) -> dict[str, set[str]]:
-    """Conservative full route map: PKG-relative module file -> every
-    registry query that (statically) routes through it."""
-    root = root or repo_root()
-    graph = _package_import_graph(root)
-    routes: dict[str, set[str]] = {}
-    for p in sorted((root / PKG / "plans").glob("registry*.py")):
-        rel = f"plans/{p.name}"
-        src = p.read_text()
-        tree = ast.parse(src)
-        bindings = _import_bindings(root, ["plans"], tree)
-        # mentions per top-level def, on the real nodes (not dumps)
-        mention_map = {}
-        for node in tree.body:
-            if isinstance(node, ast.FunctionDef):
-                mention_map[node.name] = _mentions(node) - {node.name}
-            elif isinstance(node, ast.Assign) and all(
-                isinstance(t, ast.Name) for t in node.targets
-            ):
-                tgts = {t.id for t in node.targets}
-                for t in tgts:
-                    mention_map[t] = _mentions(node.value) - tgts
-            elif isinstance(node, ast.AnnAssign) and isinstance(
-                node.target, ast.Name
-            ):
-                if node.value is not None:
-                    mention_map[node.target.id] = _mentions(node.value)
-        for node in tree.body:
-            if not isinstance(node, ast.FunctionDef):
-                continue
-            qname = _registered_query(node)
-            if qname is None:
-                continue
-            names = set(_mentions(node))
-            while True:
-                grew = set()
-                for n in list(names):
-                    grew |= mention_map.get(n, set()) - names
-                if not grew:
-                    break
-                names |= grew
-            # The @register decorator binding is registration plumbing,
-            # not a data route: counting it would put EVERY query in
-            # plans/registry.py's route set and drown the map.  Changes to
-            # registry.py's own blocks/helpers still route via definition
-            # site or helper mentions.
-            direct = {rel} | {
-                bindings[n]
-                for n in names
-                if n in bindings
-                and not (n == "register" and bindings[n] == "plans/registry.py")
-            }
-            full: set[str] = set()
-            for m in direct:
-                full |= _transitive_imports(graph, m)
-            for m in full:
-                routes.setdefault(m, set()).add(qname)
-    return routes
+def _correctness_files(root: Path) -> dict[int, Path]:
+    return {
+        int(m.group(1)): path
+        for path in root.glob("CORRECTNESS_r*.json")
+        if (m := re.search(r"r(\d+)", path.name))
+    }
+
+
+def correctness_rounds(root: Path) -> dict[int, list[str]]:
+    """round -> query names with a row in that round's CORRECTNESS file."""
+    return {
+        rnd: sorted(json.loads(path.read_text()))
+        for rnd, path in _correctness_files(root).items()
+    }
+
+
+# ---------------------------------------------------------------------------
+# Call-path fingerprints
+# ---------------------------------------------------------------------------
+
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _defined_names(node: ast.stmt) -> list[str]:
+    """Names a top-level statement defines (imports are bindings, not
+    definitions)."""
+    if isinstance(node, _DEFS):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)
+    ]
+
+
+def _registered_query(node: ast.stmt) -> str | None:
+    """Query name if ``node`` carries a ``@register("name", ...)``.  A query
+    registered any other way gets no fingerprint, so it is never certified."""
+    if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return None
+    for dec in node.decorator_list:
+        func = dec.func if isinstance(dec, ast.Call) else None
+        name = getattr(func, "id", None) or getattr(func, "attr", None)
+        if name == "register" and dec.args:
+            arg = dec.args[0]
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                return arg.value
+    return None
+
+
+def _is_docstring(stmt: ast.stmt) -> bool:
+    return (
+        isinstance(stmt, ast.Expr)
+        and isinstance(stmt.value, ast.Constant)
+        and isinstance(stmt.value.value, str)
+    )
+
+
+class _Module:
+    """One parsed package file: its top-level definitions and the
+    package-internal names it imports anywhere (function-local included)."""
+
+    def __init__(self, pkg: Path, rel: str) -> None:
+        self.tree = ast.parse((pkg / rel).read_text())
+        self.defs: dict[str, list[ast.stmt]] = {}
+        for node in self.tree.body:
+            for name in _defined_names(node):
+                self.defs.setdefault(name, []).append(node)
+        #: bound name -> [(module file, symbol or None for the module)]
+        self.binds: dict[str, list[tuple[str, str | None]]] = {}
+        here = rel.split("/")[:-1]
+        for node in ast.walk(self.tree):
+            if isinstance(node, _DEFS) and _is_docstring(node.body[0]):
+                node.body = node.body[1:]
+            elif isinstance(node, ast.ImportFrom):
+                if node.level:
+                    if node.level - 1 > len(here):
+                        continue
+                    parts = here[: len(here) - node.level + 1]
+                    parts += node.module.split(".") if node.module else []
+                elif node.module == PKG or (node.module or "").startswith(PKG + "."):
+                    parts = node.module.split(".")[1:]
+                else:
+                    continue
+                mod = _module_file(pkg, parts)
+                if mod is None:
+                    raise LookupError(f"{rel}: unresolved {ast.unparse(node)}")
+                for alias in node.names:
+                    sub = _module_file(pkg, parts + [alias.name])
+                    target = (sub, None) if sub else (mod, alias.name)
+                    self.binds.setdefault(alias.asname or alias.name, []).append(target)
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    parts = alias.name.split(".")
+                    if parts[0] != PKG:
+                        continue
+                    if alias.asname is None:  # binds the package itself
+                        parts = parts[:1]
+                    mod = _module_file(pkg, parts[1:])
+                    if mod is None:
+                        raise LookupError(f"{rel}: unresolved {ast.unparse(node)}")
+                    self.binds.setdefault(alias.asname or PKG, []).append((mod, None))
+
+
+def _module_file(pkg: Path, parts: list[str]) -> str | None:
+    """Package-relative file of a dotted module path, else None."""
+    rel = "/".join(parts)
+    if rel and (pkg / f"{rel}.py").is_file():
+        return f"{rel}.py"
+    init = f"{rel}/__init__.py" if rel else "__init__.py"
+    return init if (pkg / init).is_file() else None
+
+
+class _Index:
+    """Lazily parsed package with memoized per-definition dependencies and
+    digests, so each definition is walked and hashed once however many
+    queries reach it."""
+
+    def __init__(self, pkg: Path) -> None:
+        self.pkg = pkg
+        self._modules: dict[str, _Module] = {}
+        self._deps: dict[Key, set[Key]] = {}
+        self._digests: dict[Key, str] = {}
+
+    def module(self, rel: str) -> _Module:
+        if rel not in self._modules:
+            self._modules[rel] = _Module(self.pkg, rel)
+        return self._modules[rel]
+
+    def reach(self, rel: str, path: list[str]) -> set[Key]:
+        """Definitions that ``<module rel>.path[0].path[1]...`` may reach; an
+        empty path is the module used as a value."""
+        if not path:
+            return {(rel, "*")}
+        name, rest = path[0], path[1:]
+        mod = self.module(rel)
+        out = {(rel, name)} if name in mod.defs else set()
+        for target, sym in mod.binds.get(name, ()):
+            out |= self.reach(target, ([sym] if sym else []) + rest)
+        if name not in mod.defs and name not in mod.binds:
+            sub = None
+            if rel.endswith("__init__.py"):
+                sub = _module_file(self.pkg, rel.split("/")[:-1] + [name])
+            # An attribute nothing defines statically: the whole module.
+            out |= self.reach(sub, rest) if sub else {(rel, "*")}
+        return out
+
+    def deps(self, key: Key) -> set[Key]:
+        if key in self._deps:
+            return self._deps[key]
+        rel, name = key
+        mod = self.module(rel)
+        out: set[Key] = set()
+        if name == "*":
+            for n in mod.defs:
+                out.add((rel, n))
+            for targets in mod.binds.values():
+                for target, sym in targets:
+                    out |= self.reach(target, [sym] if sym else [])
+        else:
+            refs: set[tuple[str, ...]] = set()
+            for node in mod.defs[name]:
+                heads = set()  # Names that head an attribute: `D` in `D.f`
+                # Breadth first: an Attribute comes before its value.
+                for n in ast.walk(node):
+                    if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+                        heads.add(id(n.value))
+                        refs.add((n.value.id, n.attr))
+                    elif isinstance(n, ast.Name) and id(n) not in heads:
+                        refs.add((n.id,))
+            for head, *attrs in refs:
+                out |= self._name(rel, head, attrs)
+        out.discard(key)
+        self._deps[key] = out
+        return out
+
+    def _name(self, rel: str, name: str, attrs: list[str]) -> set[Key]:
+        """What a bare ``name`` (or ``name.attr``) inside module ``rel``
+        reaches: its module-local definition and any import binding it.
+        Other names are locals, builtins or outside the package."""
+        mod = self.module(rel)
+        out = {(rel, name)} if name in mod.defs else set()
+        for target, sym in mod.binds.get(name, ()):
+            out |= self.reach(target, ([sym] if sym else []) + attrs)
+        return out
+
+    def digest(self, key: Key) -> str:
+        if key not in self._digests:
+            rel, name = key
+            nodes = [] if name == "*" else self.module(rel).defs[name]
+            dump = "\n".join(ast.dump(n) for n in nodes)
+            self._digests[key] = hashlib.sha256(dump.encode()).hexdigest()
+        return self._digests[key]
+
+    def closure(self, key: Key) -> set[Key]:
+        seen = {key}
+        frontier = [key]
+        while frontier:
+            for dep in self.deps(frontier.pop()):
+                if dep not in seen:
+                    seen.add(dep)
+                    frontier.append(dep)
+        return seen
+
+    def fingerprint(self, key: Key) -> str:
+        h = hashlib.sha256()
+        for rel, name in sorted(self.closure(key)):
+            h.update(f"{rel}\0{name}\0{self.digest((rel, name))}\n".encode())
+        return h.hexdigest()
+
+
+def fingerprints(root: Path) -> dict[str, str]:
+    """query name -> call-path fingerprint, for every ``@register`` function
+    in the package's ``plans/registry*.py`` files under ``root``."""
+    index = _Index(root / PKG)
+    out: dict[str, str] = {}
+    for path in sorted((root / PKG / "plans").glob("registry*.py")):
+        rel = f"plans/{path.name}"
+        for node in index.module(rel).tree.body:
+            query = _registered_query(node)
+            if query is not None:
+                out[query] = index.fingerprint((rel, node.name))
+    return out
+
+
+def snapshot(root: Path, sha: str, queries: list[str]) -> dict[str, str]:
+    """Fingerprints of ``queries`` on the package tree of commit ``sha``."""
+    archive = subprocess.run(
+        ["git", "-C", str(root), "archive", sha, PKG],
+        check=True,
+        capture_output=True,
+    ).stdout
+    with tempfile.TemporaryDirectory() as tmp:
+        with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+            tar.extractall(tmp, filter="data")
+        fps = fingerprints(Path(tmp))
+    return {q: fps[q] for q in sorted(queries) if q in fps}
+
+
+def snapshots(root: Path) -> dict[str, dict[str, str]]:
+    """One snapshot per round with a CORRECTNESS file and a verdict commit
+    (the newest, should a round have several)."""
+    commits: dict[int, str] = {}
+    for rnd, sha in verdict_commits(root):
+        commits.setdefault(rnd, sha)
+    return {
+        str(rnd): snapshot(root, commits[rnd], queries)
+        for rnd, queries in sorted(correctness_rounds(root).items())
+        if rnd in commits
+    }
+
+
+def main() -> None:
+    root = repo_root()
+    text = json.dumps(snapshots(root), indent=1) + "\n"
+    (root / MANIFEST).write_text(text)
+    print(f"wrote {MANIFEST}")
+
+
+if __name__ == "__main__":
+    main()
