@@ -54,7 +54,7 @@ import tempfile
 import time
 
 from cdc_wastewater_analysis_ml_spark.plans.registry import QUERIES
-from cdc_wastewater_analysis_ml_spark.session import get_spark
+from cdc_wastewater_analysis_ml_spark.session import codegen_compiles, get_spark
 
 #: Headline set: one per operator family — relational core, joins, windows,
 #: metric queries, dedup/similarity/text extensions.
@@ -203,10 +203,16 @@ def main() -> None:
     _force(QUERIES["sim_cosine_topk"](spark, "/root/testdata/sf0.001"))
     _force(QUERIES["multimodal_media_stats"](spark, "/root/testdata/sf0.001"))
     _force(QUERIES["sim_cosine_ivf"](spark, "/root/testdata/sf0.001"))
-    # ...then EVERY headline query once at the smallest fixture: each query
-    # shape's codegen/JIT compiles on tiny data, so its first TIMED run at
-    # the benchmark sf measures the query, not compilation (the residual
-    # ~25% first_run_total inflation after the r6 IVF-prebuild fix).
+    # ...then EVERY headline query once at the smallest fixture, so each
+    # query's Python paths, worker pools and JVM classes are loaded before
+    # its first TIMED run.  Its generated classes stay in the session's
+    # codegen cache (sized by get_spark to hold them all) and are reused
+    # wherever the benchmark-sf plan generates the same code; a shape
+    # whose code depends on the data (join strategy, partition counts) or
+    # on the order in which AQE numbers its codegen stages still compiles
+    # in its first timed run.  The sidecar's
+    # ``codegen_compiles_first_run`` counts what each first run compiled:
+    # 10 classes over the 57 queries at sf0.1 (DEVNOTES r17).
     # The four explicit calls above deliberately overlap this loop: they
     # pin the worker-pool spin-up ORDER (chained mapInPandas→UDF profile
     # last) and fail loudly, where the loop tolerates errors.
@@ -226,13 +232,20 @@ def main() -> None:
     medians: dict[str, float] = {}
     first: dict[str, float] = {}
     detail: dict[str, list[float]] = {}
+    # Janino compiles per query, read as deltas of the JVM's counter (no
+    # job): in the first timed run, and in the remaining runs together.
+    compiles_first: dict[str, int] = {}
+    compiles_later: dict[str, int] = {}
     for name in HEADLINE:
         samples: list[float] = []
+        compiles: list[int] = []
         for _ in range(runs):
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = QUERIES[name](spark, sf_dir)
             _force(df)
             samples.append(time.perf_counter() - t0)
+            compiles.append(codegen_compiles(spark) - c0)
             # Drop the handle NOW so scoped_persist finalizers release this
             # run's caches before the next run re-registers the same plans
             # (a live prior handle would make CacheManager dedupe the entry,
@@ -242,6 +255,8 @@ def main() -> None:
         medians[name] = round(statistics.median(samples), 3)
         first[name] = round(samples[0], 3)
         detail[name] = [round(s, 3) for s in samples]
+        compiles_first[name] = compiles[0]
+        compiles_later[name] = sum(compiles[1:])
 
     # Full per-run detail goes to a sidecar file, NOT stdout: the driver's
     # record keeps only the tail of stdout, and the medians dict must never
@@ -297,6 +312,8 @@ def main() -> None:
         "samples": detail,
         "medians": medians,
         "value": round(sum(medians.values()), 3),
+        "codegen_compiles_first_run": compiles_first,
+        "codegen_compiles_later_runs": compiles_later,
     }
     try:
         write_detail_sidecar(committed, payload)

@@ -1134,14 +1134,7 @@ def q_text_winnow_fingerprint(spark, sf_dir):
     from ..operators import text as T
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # explode_outer: suppress the InferFiltersFromGenerate size()>0 filter,
-    # which re-computes the whole winnowing expression per row (same
-    # mechanism as corpus.contamination_overlap); the fingerprint array is
-    # never empty for non-null text, and a null-text row's null fp is the
-    # outer variant's only delta.
-    return docs.select(
-        "doc_id", F.explode_outer(T.winnow_fingerprints("text", 5, 4)).alias("fp")
-    )
+    return T.winnow_fingerprints(docs, "text", "doc_id", 5, 4)
 
 
 def _lsh_verified_sql() -> str:

@@ -12,6 +12,15 @@ matter at cluster scale and are harmless in local mode:
   naive-timestamp reading of the same parquet).
 - Arrow enabled — every pandas interchange (createDataFrame/toPandas and all
   pandas UDFs) is batch-columnar, not row-pickled.
+- ``spark.sql.codegen.cache.maxEntries`` sized to a registry sweep — see
+  :data:`CODEGEN_CACHE_ENTRIES`.  Spark's default of 100 is smaller than
+  the 211 classes one pass over the 17 ``olap_mix`` queries generates, so
+  the LRU evicted each class before the pass came round to it again: every
+  warm pass recompiled ~210 classes in Janino and HotSpot JIT-compiled them
+  from scratch.  With the cache sized, a second pass compiles 0 classes,
+  and the benchmark's ``olap_mix`` ``cpu_s`` per pass fell from 32.6 to
+  23.5 s (medians of ten pairs, ``local[4]`` on a 4-vCPU host; DEVNOTES
+  r17).
 
 A local session this module launches starts its driver JVM from a dynamic
 class-data-sharing archive (JEP 350) kept in the user cache, and records one
@@ -86,6 +95,31 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: Entries of Spark's generated-class cache (``spark.sql.codegen.cache.
+#: maxEntries``, a static conf, default 100) in sessions :func:`get_spark`
+#: launches.  A query shape's whole-stage and expression classes then
+#: compile once per session, and the JIT code built from them survives
+#: between passes.  Building each of the 171 registry queries twice at
+#: sf0.001 compiles 2,131 classes in one session; this holds that sweep,
+#: rounded up to a power of two, for ~15 MB more metaspace (DEVNOTES r17).
+CODEGEN_CACHE_ENTRIES = 4096
+
+#: Static confs set on the JVM :func:`get_spark` launches and on the probe
+#: sessions under ``tools/``.  Static: a live session cannot take them, so
+#: they are not in ``RUNTIME_CONFS``.
+LAUNCH_CONFS: dict[str, str] = {
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+}
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the session's JVM has compiled in Janino so far: the sample
+    count of Spark's ``CodegenMetrics`` compilation-time histogram.  A cache
+    hit in the generated-class cache adds nothing; reading it runs no job."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 #: Shared by the signature default and the reuse-warning comparison below —
 #: two hardcoded copies could drift, making every default-argument call
 #: warn spuriously (r10 review).
@@ -109,6 +143,10 @@ def get_spark(
     so embedding the CLI in an existing session renamed it and reset its
     shuffle parallelism — observed as an order-dependent plan change in the
     test suite (a 32-partition leak re-shuffling an 8-bucket store side).
+
+    Only a session this call launches gets :data:`LAUNCH_CONFS`: a reused
+    live session keeps its own codegen cache size (a static conf), and a
+    Spark Connect server owns its confs.
     """
     # A session created in another thread is reusable but not "active" in
     # this one; builder.getOrCreate() below would find and clobber it, so
@@ -172,6 +210,8 @@ def get_spark(
             .config("spark.driver.memory", driver_memory)
             .config("spark.ui.enabled", "false")
         )
+        for k, v in LAUNCH_CONFS.items():
+            builder = builder.config(k, v)
     builder = builder.config(
         "spark.sql.shuffle.partitions", str(shuffle_partitions)
     ).config("spark.sql.parquet.filterPushdown", "true")

@@ -15,7 +15,11 @@ import sys
 import pytest
 from pyspark.find_spark_home import _find_spark_home
 
-from cdc_wastewater_analysis_ml_spark.session import _LAUNCH_ENV, _promote_archive
+from cdc_wastewater_analysis_ml_spark.session import (
+    LAUNCH_CONFS,
+    _LAUNCH_ENV,
+    _promote_archive,
+)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CSV = os.path.join(ROOT, "fixtures", "wastewater_samples.csv")
@@ -165,7 +169,8 @@ def test_spark_connect_gets_no_class_data_flags(tmp_path, var, value):
     driver JVM is launched, so flags would only reach the server.  Where
     pyspark refuses before any launch (no Connect client installed), no
     flags are built either.  ``SPARK_REMOTE`` must reach getOrCreate: the
-    builder holds no master, which pyspark refuses next to it."""
+    builder holds no master, which pyspark refuses next to it, and no
+    launch conf such as the codegen cache size, which the server owns."""
     cache = tmp_path / "xdg"
     out = _run(["-c", CONNECT_PROBE], _env(cache, **{var: value}))
     flags, no_launch, options = json.loads(out.splitlines()[-1])
@@ -173,12 +178,14 @@ def test_spark_connect_gets_no_class_data_flags(tmp_path, var, value):
     if var == "SPARK_REMOTE":
         assert isinstance(options, dict), options
         assert flags == [] and "spark.master" not in options, options
+        assert not set(LAUNCH_CONFS) & set(options), options
     assert not (cache / "spark-graft").exists()
     # The same probe without the variable does pass the flags.
     out = _run(["-c", CONNECT_PROBE], _env(cache))
     flags, no_launch, options = json.loads(out.splitlines()[-1])
     assert [flags, no_launch] == [["spark.driver.extraJavaOptions"], False]
     assert options["spark.master"].startswith("local[")
+    assert {k: options[k] for k in LAUNCH_CONFS} == LAUNCH_CONFS
 
 
 def test_only_a_clean_jvm_exit_promotes_the_dump(tmp_path):

@@ -5,11 +5,15 @@ test_registry_parity.py."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from cdc_wastewater_analysis_ml_spark.operators import corpus as C
 from cdc_wastewater_analysis_ml_spark.operators import sampling as SAM
+from cdc_wastewater_analysis_ml_spark.operators import text as T
 from cdc_wastewater_analysis_ml_spark.operators.dedup import (
     cluster_dedup_decision,
     connected_components,
@@ -346,3 +350,40 @@ def test_resample_mixture_fractional_above_one(spark):
     out = SAM.resample_mixture(df, "k", "g", {"a": 1.5}, seed=2)
     n = out.count()
     assert 1350 < n < 1650  # ≈ 1.5×
+
+
+def _winnow_py(text: str, k: int = 5, window: int = 4) -> set[str]:
+    """Winnowing as the operator defines it, in plain Python: Spark's
+    ``trim`` strips spaces only, and ``\\s`` in Java regex is ASCII
+    whitespace."""
+    norm = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower().strip(" "))
+    hashes = [
+        hashlib.md5(norm[i:i + k].encode()).hexdigest()[:16]
+        for i in range(max(len(norm) - k + 1, 1))
+    ]
+    return {
+        min(hashes[i:i + window]) for i in range(max(len(hashes) - window + 1, 1))
+    }
+
+
+def test_winnow_fingerprints_match_pure_python(spark):
+    docs = [
+        (1, "The quick brown fox jumps over the lazy dog"),
+        (2, "  Tabs\tand\n\nnewlines   between WORDS "),
+        (3, "abc"),
+        (4, ""),
+        (5, None),
+        (6, "a QUICK brown fox jumps twice"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got: dict[int, list] = {}
+    for r in T.winnow_fingerprints(df, "text", "doc_id").collect():
+        got.setdefault(r.doc_id, []).append(r.fp)
+    assert got.pop(5) == [None]
+    assert all(len(fps) == len(set(fps)) for fps in got.values()), got
+    assert {d: set(fps) for d, fps in got.items()} == {
+        d: _winnow_py(t) for d, t in docs if t is not None
+    }
+    # A shared substring of ≥ k + window − 1 = 8 characters shares a print.
+    assert set(got[1]) & set(got[6])
+

@@ -63,7 +63,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from cdc_wastewater_analysis_ml_spark.session import RUNTIME_CONFS
+from cdc_wastewater_analysis_ml_spark.session import LAUNCH_CONFS, RUNTIME_CONFS
 
 #: The 9-family ladder recorded in DEVNOTES (r6) — the default probe set.
 DEFAULT_QUERIES = [
@@ -135,8 +135,9 @@ if SMALL_LABEL != "sf0.1" and not OUT_NAME:
 
 
 def build_session(app_name: str = "scale_probe", port: int = 4049) -> SparkSession:
-    """Probe session: local[32], UI enabled for the REST stage counters.
-    Shared with ``stage_profile`` so both measure one session shape."""
+    """Probe session: local[32], UI enabled for the REST stage counters,
+    and the launch and runtime confs of ``get_spark``.  Shared with
+    ``stage_profile`` so both measure one session shape."""
     b = (
         SparkSession.builder.appName(app_name)
         .master("local[32]")
@@ -154,7 +155,7 @@ def build_session(app_name: str = "scale_probe", port: int = 4049) -> SparkSessi
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", str(port))
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**LAUNCH_CONFS, **RUNTIME_CONFS}.items():
         b = b.config(k, v)
     return b.getOrCreate()
 

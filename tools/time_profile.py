@@ -14,7 +14,8 @@ does the per-query WALL time actually go at the bench scale factor:
 Usage: python -m tools.time_profile QUERY FIXTURE_DIR [runs]
 
 Bench parity: local[$SPARK_GRAFT_CPUS] (default 32), shuffle partitions
-32, RUNTIME_CONFS, one warm-up run at sf0.001 then `runs` timed runs at
+32, LAUNCH_CONFS and RUNTIME_CONFS (the codegen cache ``get_spark`` sizes),
+one warm-up run at sf0.001 then `runs` timed runs at
 FIXTURE_DIR (default 3, median reported), noop sink.
 """
 
@@ -30,7 +31,7 @@ import urllib.request
 
 from pyspark.sql import SparkSession
 
-from cdc_wastewater_analysis_ml_spark.session import RUNTIME_CONFS
+from cdc_wastewater_analysis_ml_spark.session import LAUNCH_CONFS, RUNTIME_CONFS
 
 
 def build_session(port: int = 4057) -> SparkSession:
@@ -43,7 +44,7 @@ def build_session(port: int = 4057) -> SparkSession:
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", str(port))
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**LAUNCH_CONFS, **RUNTIME_CONFS}.items():
         b = b.config(k, v)
     return b.getOrCreate()
 
